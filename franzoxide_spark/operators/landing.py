@@ -112,10 +112,14 @@ def land_fact_relation(
     """Persist a FACT table bucketed + in-bucket sorted on its join key
     and return the re-read relation. Both sides of a fact-fact equi-join
     landed this way (same key family, same bucket count) join with NO
-    Exchange and NO Sort on either side — the 100 TB fact-fact shape
-    measured in examples/bucketed_facts_demo.py (1.4x at 10x growing to
-    3.9x at 30x, BASELINE.md r17). One file per bucket (repartition on
-    the bucket key first) so Spark trusts the sortBy metadata."""
+    Exchange on either side — the 100 TB fact-fact shape measured in
+    examples/bucketed_facts_demo.py (1.4x at 10x growing to 3.9x at 30x,
+    BASELINE.md r17). Each side keeps one in-partition Sort above its
+    bucketed scan: eliding it needs
+    ``spark.sql.legacy.bucketedTableScan.outputOrdering``, left off on
+    purpose (see ``operators.dedup.land_shingle_relation``). One file per
+    bucket (repartition on the bucket key first), so the sortBy layout
+    stays usable should that flag be turned on."""
     (
         df.repartition(n_buckets, key_col)
         .write.mode(mode)
@@ -212,8 +216,9 @@ def fact_join_relations(
     - past the threshold (the 10x/30x replica regime and up, where the
       join pays a full shuffle+sort of BOTH sides), land each side once
       bucketed + in-bucket sorted on its join key and serve the landed
-      relations: the join runs with no Exchange and no Sort on either
-      side, write-once/join-many with cross-session adoption.
+      relations: the join runs with no Exchange on either side (one
+      in-partition Sort per side remains, see ``land_fact_relation``),
+      write-once/join-many with cross-session adoption.
 
     ``left_cols``/``right_cols``: the columns the consumer's join
     actually carries. The gate compares the SMALLER side's estimated
@@ -261,7 +266,13 @@ def fact_join_relations(
         n_buckets = 16
         while n_buckets * (128 << 20) < max(lb, rb) and n_buckets < 4096:
             n_buckets *= 2
+    # the source key names the table: two tables keyed on a column of
+    # the same name must not share one landing identity
     return (
-        shared_fact_relation(left, left_key, sf_dir, n_buckets=n_buckets),
-        shared_fact_relation(right, right_key, sf_dir, n_buckets=n_buckets),
+        shared_fact_relation(
+            left, left_key, f"{sf_dir}/{left_name}", n_buckets=n_buckets
+        ),
+        shared_fact_relation(
+            right, right_key, f"{sf_dir}/{right_name}", n_buckets=n_buckets
+        ),
     )

@@ -3,8 +3,8 @@
 parquet log with real broker semantics — per-partition contiguous
 offsets, ``latestOffset`` re-scanning the log end each trigger (so
 batches track data arrival exactly as they do against a live broker),
-offset-dict checkpointing, and one Spark input partition per Kafka
-partition.
+offset-dict checkpointing, and per-partition offset ranges packed into
+at most one wave of read tasks per micro-batch.
 
 Why it exists: the environment has no Kafka broker (mirrored by the
 reference's own disabled integration CI, .github/workflows/ci.yml:60-69),
@@ -28,16 +28,25 @@ external system, never from reader-process memory.
 Offsets are dicts ``{partition(str): next_offset(int)}`` — JSON-encoded
 by Spark into the checkpoint WAL.
 
-Scale shape: ``partitions(start, end)`` emits one InputPartition per
-Kafka partition; executors read their slice with parquet predicate
-pushdown (pyarrow filters on partition + offset range) and yield Arrow
-record batches — no per-row Python objects. ``latestOffset`` reads only
-the (partition, offset) columns on the driver; a production source gets
-this from broker metadata instead of a scan.
+Scale shape: a micro-batch's non-empty per-partition offset ranges
+are packed into at most ``maxReadTasks`` read tasks (``read_replay_stream``
+sets it to the session's ``defaultParallelism``), so a batch runs one
+wave of tasks instead of one Python task per Kafka partition: each read
+task pays a fixed worker start-up cost that dwarfs reading a few hundred
+records. Packing is greedy by record count, and each Kafka partition's
+range lands in exactly one task; with more slots than partitions, or
+without the option (and always in the batch reader), the plan is one
+task per partition. A task reads all its ranges with one parquet scan
+whose pyarrow filter ORs the per-partition ``(partition, offset range)``
+predicates, and yields Arrow record batches — no per-row Python objects.
+``latestOffset`` reads only the (partition, offset) columns on the
+driver; a production source gets this from broker metadata instead of
+a scan.
 """
 
 from __future__ import annotations
 
+import heapq
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -95,25 +104,46 @@ def stage_replay(
 
 
 @dataclass
-class _OffsetRange(InputPartition):
+class _OffsetRanges(InputPartition):
+    """One read task: the ``(partition, start, end)`` offset ranges it
+    serves, at most one per Kafka partition."""
+
     path: str
-    partition: int
-    start: int
-    end: int
+    ranges: tuple[tuple[int, int, int], ...]
 
 
-def _read_range(rng: _OffsetRange):
-    """Executor-side slice read: parquet predicate pushdown via pyarrow
-    filters, yielded as Arrow record batches (no Python row objects)."""
+def _pack_ranges(
+    ranges: list[tuple[int, int, int]], max_tasks: int | None
+) -> list[tuple[tuple[int, int, int], ...]]:
+    """Group ``(partition, start, end)`` ranges into at most ``max_tasks``
+    read tasks. Empty ranges are dropped. Without a cap, or with one at
+    least the range count, each range is its own task; otherwise ranges
+    go largest first onto the task with the fewest records so far, so
+    skewed partitions still give tasks of similar size."""
+    ranges = [r for r in ranges if r[2] > r[1]]
+    if max_tasks is None or max_tasks >= len(ranges):
+        return [(r,) for r in ranges]
+    tasks: list[list[tuple[int, int, int]]] = [[] for _ in range(max_tasks)]
+    loads = [(0, i) for i in range(max_tasks)]
+    for r in sorted(ranges, key=lambda r: (r[1] - r[2], r[0])):
+        load, i = heapq.heappop(loads)
+        tasks[i].append(r)
+        heapq.heappush(loads, (load + r[2] - r[1], i))
+    return [tuple(sorted(t)) for t in tasks]
+
+
+def _read_ranges(task: _OffsetRanges):
+    """Executor-side read of one task's ranges: one parquet scan with
+    predicate pushdown (a pyarrow DNF filter, one conjunction per
+    range), yielded as Arrow record batches (no Python row objects)."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(
-        rng.path,
+        task.path,
         columns=_COLUMNS,
         filters=[
-            ("partition", "=", rng.partition),
-            ("offset", ">=", rng.start),
-            ("offset", "<", rng.end),
+            [("partition", "=", p), ("offset", ">=", lo), ("offset", "<", hi)]
+            for p, lo, hi in task.ranges
         ],
     )
     yield from tbl.to_batches()
@@ -152,6 +182,10 @@ class _ReplayStreamReader(DataSourceStreamReader):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("kafka_replay requires a 'path' option")
+        max_tasks = options.get("maxReadTasks")
+        self._max_tasks = int(max_tasks) if max_tasks else None
+        if self._max_tasks is not None and self._max_tasks < 1:
+            raise ValueError("kafka_replay 'maxReadTasks' must be >= 1")
 
     def initialOffset(self) -> dict:
         return {p: 0 for p in _partition_ends(self._path)}
@@ -164,14 +198,16 @@ class _ReplayStreamReader(DataSourceStreamReader):
         return _partition_ends(self._path)
 
     def partitions(self, start: dict, end: dict):
+        ranges = [
+            (int(p), int(start.get(p, 0)), int(e)) for p, e in end.items()
+        ]
         return [
-            _OffsetRange(self._path, int(p), int(start.get(p, 0)), int(e))
-            for p, e in end.items()
-            if int(e) > int(start.get(p, 0))
+            _OffsetRanges(self._path, task)
+            for task in _pack_ranges(ranges, self._max_tasks)
         ]
 
-    def read(self, partition: _OffsetRange):
-        return _read_range(partition)
+    def read(self, partition: _OffsetRanges):
+        return _read_ranges(partition)
 
     def commit(self, end: dict) -> None:
         # offsets live in Spark's checkpoint WAL; nothing external to ack
@@ -186,18 +222,20 @@ class _ReplayBatchReader(DataSourceReader):
 
     def partitions(self):
         return [
-            _OffsetRange(self._path, int(p), 0, e)
+            _OffsetRanges(self._path, ((int(p), 0, e),))
             for p, e in _partition_ends(self._path).items()
         ]
 
-    def read(self, partition: _OffsetRange):
-        return _read_range(partition)
+    def read(self, partition: _OffsetRanges):
+        return _read_ranges(partition)
 
 
 class KafkaReplayDataSource(DataSource):
     """``spark.dataSource.register(KafkaReplayDataSource)`` then
     ``spark.readStream.format("kafka_replay").option("path", ...)`` (or
-    ``spark.read`` for the batch face)."""
+    ``spark.read`` for the batch face). The stream face's optional
+    ``maxReadTasks`` caps the read tasks of a micro-batch; without it a
+    batch runs one task per Kafka partition."""
 
     @classmethod
     def name(cls) -> str:
@@ -218,9 +256,14 @@ def register_replay_source(spark: SparkSession) -> None:
 
 
 def read_replay_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The replay log as a stream whose micro-batches run at most one
+    wave of read tasks (``defaultParallelism``)."""
     register_replay_source(spark)
     return (
-        spark.readStream.format("kafka_replay").option("path", path).load()
+        spark.readStream.format("kafka_replay")
+        .option("path", path)
+        .option("maxReadTasks", spark.sparkContext.defaultParallelism)
+        .load()
     )
 
 

@@ -1422,9 +1422,13 @@ def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
     """r18 (VERDICT r17 #7): the co-bucketed fact-fact landing is a
     SERVED path — fact_join_relations routes a too-big-to-broadcast
     orderkey join through orderkey-bucketed landings, and the join plan
-    carries no Exchange and no Sort above either scan. Forced on at
-    fixture scale (the size gate keeps bench SFs on the plain
-    broadcast-join scans); rows must be identical to the plain scans."""
+    carries no Exchange. Each side keeps exactly one in-partition Sort
+    above its bucketed scan (the bucketed scan's output ordering is left
+    off on purpose, operators/dedup.py). Forced on at fixture scale (the
+    size gate keeps bench SFs on the plain broadcast-join scans); rows
+    must be identical to the plain scans."""
+    import re
+
     from franzoxide_spark.operators.landing import fact_join_relations
 
     monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "force")
@@ -1442,6 +1446,8 @@ def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan, plan
+        sorts = re.findall(r"\bSort \[(\w+)#", plan)
+        assert sorted(sorts) == ["l_orderkey", "o_orderkey"], plan
         # identity vs the ungated plain scans
         monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "0")
         pli, po = fact_join_relations(
@@ -1454,6 +1460,38 @@ def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
         assert j.count() == pj.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_fact_landings_of_same_named_keys_do_not_collide(
+    spark, tmp_path, monkeypatch
+):
+    """Two fact tables keyed on a column of the same name land as two
+    tables: the landing identity carries the table, so the in-session
+    fast path never serves the left landing for the right side."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from franzoxide_spark.operators.landing import fact_join_relations
+
+    pq.write_table(
+        pa.table({"k": [1, 2, 3], "v": ["l1", "l2", "l3"]}),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    pq.write_table(
+        pa.table({"k": [2, 3, 4, 5], "v": ["o2", "o3", "o4", "o5"]}),
+        str(tmp_path / "orders.parquet"),
+    )
+    monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "force")
+    monkeypatch.setenv("SPARK_GRAFT_FACTS_BUCKETS", "4")
+    left, right = fact_join_relations(
+        spark, str(tmp_path), "lineitem", "orders", "k", "k"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("k", "v").collect())
+
+    assert rows(left) == [(1, "l1"), (2, "l2"), (3, "l3")]
+    assert rows(right) == [(2, "o2"), (3, "o3"), (4, "o4"), (5, "o5")]
 
 
 def test_fact_landing_size_gate_stays_off_at_fixture_scale(spark, sf_dir):

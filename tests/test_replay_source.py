@@ -1,13 +1,15 @@
 """Kafka-replay custom DataSource (sources/replay.py): broker-like
 offset semantics without a broker — per-partition contiguous offsets, a
 growing log flowing as new micro-batches, WAL checkpoint resume
-mid-stream, exactly-once through the file sink."""
+mid-stream, exactly-once through the file sink, and a micro-batch's
+partition ranges packed into at most one wave of read tasks."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from franzoxide_spark.sources.replay import (
+    _pack_ranges,
     read_replay_stream,
     register_replay_source,
     stage_replay,
@@ -206,3 +208,83 @@ def test_stream_starts_against_empty_log(spark, tmp_path):
     empty = tmp_path / "empty_log"
     empty.mkdir()
     assert _partition_ends(str(empty)) == {}
+
+
+def _partitions_of(tasks):
+    return sorted(p for task in tasks for p, _lo, _hi in task)
+
+
+def test_pack_ranges_caps_tasks_and_keeps_each_partition_once():
+    ranges = [(p, 10 * p, 10 * p + 150) for p in range(8)]
+    tasks = _pack_ranges(ranges, 4)
+    assert len(tasks) == 4
+    assert _partitions_of(tasks) == list(range(8))
+    # every range is carried unchanged
+    assert sorted(r for task in tasks for r in task) == ranges
+    assert [sum(hi - lo for _p, lo, hi in t) for t in tasks] == [300] * 4
+
+
+def test_pack_ranges_drops_empty_ranges():
+    ranges = [(0, 5, 5), (1, 0, 3), (2, 7, 7), (3, 2, 4)]
+    tasks = _pack_ranges(ranges, 4)
+    assert sorted(tasks) == [((1, 0, 3),), ((3, 2, 4),)]
+    assert _pack_ranges([(0, 5, 5)], 4) == []
+    assert _pack_ranges([(0, 5, 5), (1, 0, 2), (2, 0, 2)], 1) == [
+        ((1, 0, 2), (2, 0, 2))
+    ]
+
+
+def test_pack_ranges_balances_skewed_ranges_by_records():
+    # one hot partition holds as many records as the other seven together
+    ranges = [(0, 0, 700)] + [(p, 0, 100) for p in range(1, 8)]
+    tasks = _pack_ranges(ranges, 2)
+    loads = sorted(sum(hi - lo for _p, lo, hi in t) for t in tasks)
+    assert loads == [700, 700]
+    assert ((0, 0, 700),) in tasks  # the hot partition gets a task alone
+    assert _partitions_of(tasks) == list(range(8))
+
+
+def test_pack_ranges_one_task_per_partition_when_slots_suffice():
+    ranges = [(p, 0, 10 + p) for p in range(8)]
+    expected = [((p, 0, 10 + p),) for p in range(8)]
+    assert _pack_ranges(ranges, 8) == expected
+    assert _pack_ranges(ranges, 32) == expected
+    assert _pack_ranges(ranges, None) == expected
+
+
+def test_stream_batches_run_one_wave_of_read_tasks(spark, sf_dir, tmp_path):
+    """An 8-partition log read through ``read_replay_stream`` runs at most
+    ``defaultParallelism`` read tasks per micro-batch, and the output is
+    still every record exactly once."""
+    path = str(tmp_path / "log")
+    stage_replay(spark, sf_dir, path, n_partitions=8, max_offset=60)
+    q = (
+        read_replay_stream(spark, path)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("replay_wave_out")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        stage_replay(spark, sf_dir, path, n_partitions=8, min_offset=60)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    tracker = spark.sparkContext.statusTracker()
+    tasks_per_job = [
+        sum(
+            tracker.getStageInfo(stage).numTasks
+            for stage in tracker.getJobInfo(job).stageIds
+        )
+        for job in tracker.getJobIdsForGroup(str(q.runId))
+    ]
+    # both slices ran: every micro-batch job reads all 8 partitions
+    assert len(tasks_per_job) >= 2
+    slots = spark.sparkContext.defaultParallelism
+    assert set(tasks_per_job) == {min(8, slots)}
+    total = spark.read.parquet(path).count()
+    out = spark.sql("SELECT partition, offset FROM replay_wave_out")
+    assert out.count() == total
+    assert out.distinct().count() == total
