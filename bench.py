@@ -149,8 +149,7 @@ PER_QUERY_NOTES = {
         "change. Later runs and the rest of the family (q35/q35b) "
         "reuse it — min-of-N reports the amortized path, the "
         "write-once/join-many posture the landing exists to measure. "
-        "A/B'd -19% vs ad-hoc at sf0.1 (q35 -40%, q35b flat); "
-        "SPARK_GRAFT_DEDUP_LANDING=0 is the ad-hoc lever"
+        "A/B'd -19% vs ad-hoc at sf0.1 (q35 -40%, q35b flat)"
     ),
     "q35_ngram_jaccard_pairs": (
         "landed path (see q119 note): -40% vs ad-hoc at sf0.1, reuses "
@@ -189,8 +188,7 @@ PER_QUERY_NOTES = {
         "the amortized path, and the rest of the family (q71/q73/q74/"
         "q89/q98/q105/q110/q149/q177) reuses it. Family A/B at sf0.1: "
         "best-sum 4.93 -> 3.52 s (-29%) with zero user-key exchanges "
-        "plan-asserted; SPARK_GRAFT_EVENTS_LANDING=0 is the ad-hoc "
-        "lever"
+        "plan-asserted"
     ),
     "q48_python_udtf_shingles": (
         "API-coverage entry: the row-at-a-time Python UDTF cost IS the "
@@ -290,8 +288,7 @@ PER_QUERY_NOTES = {
         "window — zero corpus-keyed exchanges, plan-asserted. A/B at "
         "sf0.1 (loaded host, min-of-6): 1.40 ad-hoc -> 0.90 landed. "
         "First retrieval query per session pays the landing write "
-        "(~2.5-5 s at sf0.1) or adopts a marked one; "
-        "SPARK_GRAFT_RETRIEVAL_LANDING=0 is the ad-hoc lever. Residual "
+        "(~2.5-5 s at sf0.1) or adopts a marked one. Residual "
         "vs a ~0.34 s oracle is multi-stage scheduler floor"
     ),
     "q157_hybrid_rrf": (
@@ -1008,8 +1005,8 @@ def main() -> None:
     detail["query_samples"] = samples
     detail["query_starts"] = starts
     detail["spark_phase_epoch"] = spark_phase_epoch
-    # Landing decisions (r14 verdict #3): what the dedup family's shared
-    # shingle landing actually DID this run (written / re-landed /
+    # Landing decisions (r14 verdict #3): what the shared landings
+    # actually DID this run (written / re-landed /
     # adopted / session-reuse, with landed stat bytes) and which
     # prefix-checkpoint branch q35b took — the r13 q35b driver-env gap
     # was undiagnosable because the artifact couldn't say whether the
@@ -1017,9 +1014,10 @@ def main() -> None:
     # with spark_phase_epoch + query_starts offsets.
     try:
         from franzoxide_spark.operators import dedup as _dedup
+        from franzoxide_spark.operators.landing import LANDING_EVENTS
 
         detail["landing"] = {
-            "events": list(_dedup.LANDING_EVENTS),
+            "events": list(LANDING_EVENTS),
             "prefix_checkpoint_decisions": list(_dedup.PREFIX_DECISIONS),
         }
         # r17 VERDICT #1: landing-write seconds this run actually paid,
@@ -1030,7 +1028,7 @@ def main() -> None:
         landing_build_s = round(
             sum(
                 e.get("secs", 0.0)
-                for e in _dedup.LANDING_EVENTS
+                for e in LANDING_EVENTS
                 if e.get("decision") in ("written", "re-landed")
             ),
             2,

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from franzoxide_spark.functions.text import sql_tokens, tokens
+from franzoxide_spark.operators.landing import shared_landing
 
 
 def _posting_relation(
@@ -137,10 +138,8 @@ def shared_posting_relation(
     lands the bucketed posting table, later calls reuse it, and a fresh
     session finding a marked fingerprint-matching landing ADOPTS it —
     the shared_shingle_relation contract on the retrieval family (one
-    ``_shared_landing`` flow for all families, r15 ADVICE)."""
-    from franzoxide_spark.operators.dedup import _shared_landing
-
-    return _shared_landing(
+    ``shared_landing`` flow for all families, r15 ADVICE)."""
+    return shared_landing(
         docs,
         # "pfdf2" versions the landed schema (postings + baked-in df +
         # baked-in corpus stats): a schema change bumps the tag -> new

@@ -279,19 +279,14 @@ def _events_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw user key, in-bucket sorted (user_id, ts) — so the family's
     shared plan shape loses its only super-scan term, the user-key
     exchange (plan-asserted in tests/test_plans.py; landed-vs-ad-hoc row
-    identity pinned per query in tests/test_oracle_queries.py). The
+    identity pinned per query in tests/test_landing.py). The
     landing write amortizes across the family exactly as the 100 TB
-    posture argues. ``SPARK_GRAFT_EVENTS_LANDING=0`` opts out (returns
-    the plain parquet scan) — the measurement lever for the A/Bs."""
-    import os as _os
-
-    ev = table(spark, sf_dir, "events")
-    if _os.environ.get("SPARK_GRAFT_EVENTS_LANDING", "1") == "0":
-        return ev
+    posture argues."""
     from franzoxide_spark.operators.landing import shared_events_relation
 
     return shared_events_relation(
-        ev, "user_id", "ts", source_key=f"{sf_dir}/events",
+        table(spark, sf_dir, "events"), "user_id", "ts",
+        source_key=f"{sf_dir}/events",
     )
 
 
@@ -2442,32 +2437,20 @@ register("q166_ab_srm_check", q166, _q166_sql())
 #        Same %97 eval split as q56.
 # --------------------------------------------------------------------------
 def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from franzoxide_spark.operators.sketch import (
-        bloom_probe_report_flagged,
-        bloom_probe_report_landed,
-    )
+    from franzoxide_spark.operators.sketch import bloom_probe_report_landed
     from franzoxide_spark.queries.llm import _docs_shingle_rel
 
-    docs = table(spark, sf_dir, "documents")
-    rel = _docs_shingle_rel(spark, sf_dir)
-    if rel is not None:
-        # probe the dedup family's bucketed shingle landing: the corpus
-        # side becomes a scan of pre-exploded HASH60 keys — no
-        # tokenize, no explode, no shingle shuffle (r14 verdict #2).
-        # Bit-identical to the ad-hoc path below (same hash contract).
-        meta = docs.select(
-            "doc_id", "source",
-            (F.col("doc_id") % 97 == 0).alias("__is_eval"),
-        )
-        return bloom_probe_report_landed(
-            rel, meta, "doc_id", "source", "__is_eval"
-        )
-    # ad-hoc fallback (SPARK_GRAFT_DEDUP_LANDING=0): both sides slice
-    # the same table -> single-scan core (one corpus read, one shingle
-    # shuffle)
-    return bloom_probe_report_flagged(
-        docs.withColumn("__is_eval", F.col("doc_id") % 97 == 0),
-        "text", "source", "__is_eval",
+    # probe the dedup family's bucketed shingle landing: the corpus
+    # side becomes a scan of pre-exploded HASH60 keys — no tokenize, no
+    # explode, no shingle shuffle (r14 verdict #2). Bit-identical to the
+    # ad-hoc bloom_probe_report_flagged (same hash contract; pinned in
+    # tests/test_funnel_sketch.py).
+    meta = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", (F.col("doc_id") % 97 == 0).alias("__is_eval"),
+    )
+    return bloom_probe_report_landed(
+        _docs_shingle_rel(spark, sf_dir), meta, "doc_id", "source",
+        "__is_eval",
     )
 
 

@@ -254,19 +254,13 @@ SELECT doc_id, cluster_id, doc_id = cluster_id AS is_survivor FROM cc
 # --------------------------------------------------------------------------
 # Q35 — exact n-gram Jaccard pairs (shingle-join)
 # --------------------------------------------------------------------------
-def _docs_shingle_rel(spark: SparkSession, sf_dir: str) -> DataFrame | None:
+def _docs_shingle_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-shared bucketed shingle landing for the dedup family
     (r10 verdict item #3): the registry's q35/q35b/q119 all route their
     self-joins through ONE landed relation per (session, corpus), so the
     bench measures the landed (exchange-free-join) path and the write-once
     cost amortizes across the family — the 100 TB land-once/join-many
-    posture BASELINE.md argues. ``SPARK_GRAFT_DEDUP_LANDING=0`` opts out
-    (returns None -> the operators' ad-hoc tokenize/shingle path), which
-    is also the measurement lever for the landed-vs-ad-hoc A/Bs."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_DEDUP_LANDING", "1") == "0":
-        return None
+    posture BASELINE.md argues."""
     from franzoxide_spark.operators.dedup import shared_shingle_relation
 
     return shared_shingle_relation(
@@ -1822,15 +1816,13 @@ _Q137_QUERIES = [
 def _docs_posting_rel(
     spark: SparkSession, sf_dir: str,
     queries: list[tuple[int, str]] | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Session-shared term-bucketed posting landing for the retrieval
     family (r16, the r14/r15 verdict suggestion): q137 and q157 route
     their inverted-index build through ONE landed (doc, term, tf, dl)
     relation per (session, corpus), so the family's only corpus-wide
     shuffle is paid once and every retrieval query serves from the
     index — the shingle/events landing trade on the third family.
-    ``SPARK_GRAFT_RETRIEVAL_LANDING=0`` opts out (returns None -> the
-    operators' ad-hoc posting build), the A/B measurement lever.
 
     The returned relation is PRE-FILTERED to the terms of ``queries``
     (default ``_Q137_QUERIES``; same ``(query_id, query_text)`` tuples
@@ -1841,10 +1833,6 @@ def _docs_posting_rel(
     future caller with a different set cannot receive a relation
     missing its postings (which would silently zero scores — r16
     ADVICE)."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_RETRIEVAL_LANDING", "1") == "0":
-        return None
     from franzoxide_spark.operators.retrieval import shared_posting_relation
 
     rel = shared_posting_relation(

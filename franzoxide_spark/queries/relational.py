@@ -765,20 +765,12 @@ def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization dominated the query 44x over base (slope sweep,
     # OPTIMIZATION_r18.md). The sliver projection rides the round-robin
     # exchange instead (column pruning pushes through repartition), so
-    # the hash pass parallelizes without caching anything. Guarded: on a
-    # real multi-split table the repartition is a no-op.
-    li = table(spark, sf_dir, "lineitem").select(*_Q104_COLS)
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # Guard on FILE count, not planned split count (r18): parquet is
-    # splittable only at row-group boundaries, so a few single-row-group
-    # files plan `target` splits but leave all rows in a handful of
-    # non-empty tasks — rdd.getNumPartitions() lies exactly when the
-    # repartition matters (x30 replica, 6 files planned as 32 splits:
-    # plain 23.7-27.4 s vs repartitioned 13.3-16.8 s min-of-3 per arm).
-    # A many-row-group table has >= target files in practice; if not,
-    # the proportional exchange is the price of full-width parallelism.
-    if len(li.inputFiles()) < target:
-        li = li.repartition(target)
+    # the hash pass parallelizes without caching anything. Guarded on
+    # file count (corpus_stats._fan_out): on a real multi-split table the
+    # repartition is a no-op.
+    from franzoxide_spark.operators.corpus_stats import _fan_out
+
+    li = _fan_out(table(spark, sf_dir, "lineitem").select(*_Q104_COLS))
     # NULL columns must render identically on both engines: Spark's
     # concat_ws SKIPS nulls while a '||' chain propagates them (md5(NULL)
     # = NULL, so SUM would silently drop the row from the very tool meant

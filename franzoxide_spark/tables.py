@@ -8,8 +8,6 @@ pushdown rather than pre-filtering.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -161,8 +159,7 @@ def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     identity gates keep this a fixture-only move: a scan with >= cores/2
     input splits, or one whose Catalyst-stats size exceeds
     ``_FANOUT_MAX_BYTES``, is returned un-fanned (at 100 TB both gates
-    trip and this function IS :func:`table`). ``SPARK_GRAFT_FANOUT=0``
-    opts out entirely (the A/B lever, mirroring the landing levers).
+    trip and this function IS :func:`table`).
 
     ``persist()`` rather than ``localCheckpoint()`` deliberately: an
     externally cleared cache (``spark.catalog.clearCache()`` — bench.py
@@ -174,8 +171,6 @@ def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     persist when ``storageLevel`` shows an external clear dropped it.
     """
     df = table(spark, sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":
-        return df
     key = (_session_key(spark), sf_dir, name)
     cached = _FANOUT.get(key)
     if cached is not None:

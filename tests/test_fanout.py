@@ -2,14 +2,12 @@
 single-split fixture scans (the generalized q56 fix, r16).
 
 Contract under test: row identity with the plain catalog relation,
-once-per-session materialization (same object back), the
-SPARK_GRAFT_FANOUT=0 opt-out, the identity gates (many-split and
-oversized scans come back un-fanned), and actual parallelism (the
-fanned relation plans >1 partition where the plain scan plans 1)."""
+once-per-session materialization (same object back), the identity gates
+(many-split and oversized scans come back un-fanned), and actual
+parallelism (the fanned relation plans >1 partition where the plain
+scan plans 1)."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -41,15 +39,6 @@ def test_fanned_table_actually_fans_out(spark, sf_dir):
         fanned.rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
-
-
-def test_fanout_env_lever_returns_plain_relation(spark, sf_dir):
-    os.environ["SPARK_GRAFT_FANOUT"] = "0"
-    try:
-        df = fanned_table(spark, sf_dir, "events")
-        assert df is table(spark, sf_dir, "events")  # the catalog object
-    finally:
-        os.environ.pop("SPARK_GRAFT_FANOUT", None)
 
 
 def test_fanout_size_gate_returns_plain_relation(spark, sf_dir, monkeypatch):

@@ -275,16 +275,24 @@ def test_cms_depth_bound_refused_on_the_driver():
         sql_cms_heavy_hitters("t", "x", width=0)
 
 
-def test_bloom_landed_path_matches_adhoc_path(spark, sf_dir, monkeypatch):
+def test_bloom_landed_path_matches_adhoc_path(spark, sf_dir):
     """The landed probe (bucketed shingle relation) and the ad-hoc probe
     (tokenize + explode) share ONE hash contract — HASH60 of the
     shingle, md5 of its decimal string for the bit layout — so the two
-    q165 paths must be row-for-row identical (r14)."""
+    paths must be row-for-row identical (r14): q165, which probes the
+    landing, against the ad-hoc operator on q165's eval split."""
+    from pyspark.sql import functions as F
+
+    from franzoxide_spark.operators.sketch import bloom_probe_report_flagged
     from franzoxide_spark.queries.corpus import q165
+    from franzoxide_spark.tables import table
 
     landed = {tuple(r) for r in q165(spark, sf_dir).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_DEDUP_LANDING", "0")
-    adhoc = {tuple(r) for r in q165(spark, sf_dir).collect()}
+    docs = table(spark, sf_dir, "documents")
+    adhoc = {tuple(r) for r in bloom_probe_report_flagged(
+        docs.withColumn("__is_eval", F.col("doc_id") % 97 == 0),
+        "text", "source", "__is_eval",
+    ).collect()}
     assert landed == adhoc and len(landed) > 0
 
 

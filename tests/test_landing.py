@@ -1,7 +1,7 @@
-"""Family-agnostic landing machinery (operators/landing.py, r15): the
-events-by-user bucketed landing on the dedup family's hardened
-session/marker/adoption flow. Registry routing is the recorded r16
-scope; these tests pin the capability itself."""
+"""The shared landing protocol (operators/landing.py): the events and
+posting families on the session/marker/adoption flow, and the
+landed-vs-plain row identity of every registry query routed through a
+landing."""
 
 from __future__ import annotations
 
@@ -32,7 +32,7 @@ def test_shared_events_relation_lands_once_and_retires_the_exchange(
     the landed relation feeds q177's batch face with ZERO exchanges and
     the identical relation to the plain path — the whole point of the
     events landing."""
-    from franzoxide_spark.operators.dedup import LANDING_EVENTS
+    from franzoxide_spark.operators.landing import LANDING_EVENTS
 
     ev = table(spark, sf_dir, "events")
     key = f"{sf_dir}/events#land_once"
@@ -66,7 +66,7 @@ def test_shared_events_relation_adopts_fresh_marked_landing(spark, sf_dir):
     adopts it as an external table CLUSTERED BY the user key (no
     re-land — file mtimes untouched), and the adopted relation still
     retires the exchange."""
-    from franzoxide_spark.operators.dedup import _LANDING_MARKER
+    from franzoxide_spark.operators.landing import _LANDING_MARKER
 
     ev = table(spark, sf_dir, "events")
     key_a = f"{sf_dir}/events#adopt_writer"
@@ -143,12 +143,14 @@ def test_events_family_landed_path_is_row_identical(
     """The landing is a physical-plan change only: every routed
     events-family query returns the exact same rows through the bucketed
     landing (default) as through the plain parquet scan
-    (SPARK_GRAFT_EVENTS_LANDING=0) — the per-query identity pin the r16
-    routing's done-criterion names."""
+    (the ``corpus._events_rel`` seam) — the per-query identity pin the
+    r16 routing's done-criterion names."""
+    from tests.test_plans import serve_plain_events
+
     load_all()
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_LANDING", "0")
-    plain = QUERIES[name](spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_LANDING", "1")
+    with monkeypatch.context() as m:
+        serve_plain_events(m)
+        plain = QUERIES[name](spark, sf_dir)
     landed = QUERIES[name](spark, sf_dir)
     assert landed.columns == plain.columns, name
     assert landed.exceptAll(plain).count() == 0, name
@@ -164,11 +166,14 @@ def test_retrieval_landed_path_is_row_identical(
 ):
     """r16 retrieval landing (verdict item #4): q137/q157 through the
     term-bucketed posting landing (df baked in) return exactly the rows
-    of the ad-hoc posting build."""
+    of the ad-hoc posting build (the operators' ``posting_rel=None``
+    path)."""
+    from tests.test_plans import serve_adhoc_postings
+
     load_all()
-    monkeypatch.setenv("SPARK_GRAFT_RETRIEVAL_LANDING", "0")
-    plain = QUERIES[name](spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_RETRIEVAL_LANDING", "1")
+    with monkeypatch.context() as m:
+        serve_adhoc_postings(m)
+        plain = QUERIES[name](spark, sf_dir)
     landed = QUERIES[name](spark, sf_dir)
     assert landed.columns == plain.columns, name
     assert landed.exceptAll(plain).count() == 0, name
@@ -178,14 +183,14 @@ def test_retrieval_landed_path_is_row_identical(
 def test_shared_posting_relation_lands_once_with_index_metadata(
     spark, sf_dir,
 ):
-    """Third family on _shared_landing (r16): first call writes the
+    """Third family on shared_landing (r16): first call writes the
     term-bucketed posting table with df AND corpus stats baked in,
     second call session-reuses; the marker carries the term bucket/sort
     spec (what adoption replays) and the baked columns equal what the
     ad-hoc build + stats pass would compute."""
     import pyspark.sql.functions as F
 
-    from franzoxide_spark.operators.dedup import (
+    from franzoxide_spark.operators.landing import (
         LANDING_EVENTS,
         _LANDING_MARKER,
     )

@@ -413,8 +413,6 @@ def test_prefix_checkpoint_not_taken_on_landed_bench_sf(spark, monkeypatch):
     from franzoxide_spark.tables import table
 
     rel = llm._docs_shingle_rel(spark, sf01)
-    if rel is None:
-        _pytest.skip("dedup landing disabled via env")
     ex = rel.select("doc_id", "n", "g")
     est = int(ex._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     assert est < dd._PREFIX_CHECKPOINT_MIN_BYTES, (
@@ -491,13 +489,17 @@ def test_ngram_rep_stats_known_values(spark):
 def test_repetition_gate_plan_is_shuffle_free(spark, sf_dir, monkeypatch):
     """The whole gate must stay map-side: no Exchange anywhere in the
     physical plan (the 100 TB property the operator exists for). Pinned
-    with the fixture fan-out lever OFF: at scale fanned_table is
+    with the fan-out's size gate tripped: at scale fanned_table is
     identity, so the operator's own shape — what this test pins — is
     the plain-scan plan; the fanned fixture path adds one round-robin
     exchange that exists only below the identity gates."""
+    from franzoxide_spark import tables
     from franzoxide_spark.queries.llm import q58
 
-    monkeypatch.setenv("SPARK_GRAFT_FANOUT", "0")
+    # trip the size gate (and start from an empty fan-out cache, which
+    # would otherwise serve a relation fanned by an earlier test)
+    monkeypatch.setattr(tables, "_FANOUT_MAX_BYTES", -1)
+    monkeypatch.setattr(tables, "_FANOUT", {})
     plan = q58(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

@@ -5,7 +5,7 @@ in so a refactor can't silently regress the plan shape."""
 
 from __future__ import annotations
 
-import os
+import pytest
 
 from franzoxide_spark.queries import QUERIES, load_all
 
@@ -17,6 +17,27 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def serve_plain_events(mp) -> None:
+    """Route the events family past its landing to the plain parquet
+    scan. The seam is ``corpus._events_rel``, which
+    ``windows_batch._events_rel`` looks up at call time."""
+    from franzoxide_spark.queries import corpus
+    from franzoxide_spark.tables import table
+
+    mp.setattr(
+        corpus, "_events_rel",
+        lambda spark, sf_dir: table(spark, sf_dir, "events"),
+    )
+
+
+def serve_adhoc_postings(mp) -> None:
+    """Route the retrieval family past its posting landing to the
+    operators' in-plan posting build (``posting_rel=None``)."""
+    import franzoxide_spark.queries.llm as llm
+
+    mp.setattr(llm, "_docs_posting_rel", lambda *a, **k: None)
 
 
 def test_q01_filter_pushed_and_columns_pruned(spark, sf_dir):
@@ -174,10 +195,10 @@ EVENTS_FAMILY_ROUTED = (
 
 
 def test_events_family_routed_plans_have_zero_user_key_exchanges(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir
 ):
-    # r16 routing done-criterion: with the events landing on (the
-    # default), every routed query's plan has NO exchange keyed on the
+    # r16 routing done-criterion: through the events landing, every
+    # routed query's plan has NO exchange keyed on the
     # user key — the bucketed scan's hashpartitioning(user_id) satisfies
     # every window/group clustering the family needs (windows partition
     # on the raw key; group keys are supersets of it). Exchanges on
@@ -185,7 +206,6 @@ def test_events_family_routed_plans_have_zero_user_key_exchanges(
     # the family's bounded-key finals and are allowed — but none of
     # them may carry user_id either (partial aggregation on the
     # bucketed partitioning absorbs the distinct-user phases).
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_LANDING", "1")
     for name in EVENTS_FAMILY_ROUTED:
         plan = _plan(spark, sf_dir, name)
         bad = [
@@ -198,14 +218,11 @@ def test_events_family_routed_plans_have_zero_user_key_exchanges(
 def test_q73_q74_events_family_ad_hoc_is_single_user_shuffle_no_joins(
     spark, sf_dir, monkeypatch
 ):
-    # the SPARK_GRAFT_EVENTS_LANDING=0 opt-out (the A/B measurement
-    # lever) must still produce the pre-landing shape: everything after
-    # the one user-key exchange is co-partitioned windows + aggregation;
-    # a join or second data shuffle would break the measured 2.1-2.6x
-    # slope at 10x events. This also guards that the env lever works —
-    # if routing ignored it, the window exchange would be gone and the
-    # lower bound here would bite.
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_LANDING", "0")
+    # over the plain events scan the operators keep the pre-landing
+    # shape: everything after the one user-key exchange is
+    # co-partitioned windows + aggregation; a join or second data
+    # shuffle would break the measured 2.1-2.6x slope at 10x events.
+    serve_plain_events(monkeypatch)
     for name in ("q73_retention_cohorts", "q74_session_sequences"):
         plan = _plan(spark, sf_dir, name)
         assert "Join" not in plan, name
@@ -298,12 +315,12 @@ def test_q89_rolling_features_single_user_exchange(spark, sf_dir, monkeypatch):
     # all three trailing frames ride ONE hash exchange on the key (ZERO
     # when the r16 events landing provides the partitioning); no range
     # partitioning (that would be a global sort), no joins
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_LANDING", "0")
-    plan = _plan(spark, sf_dir, "q89_rolling_time_features")
+    with monkeypatch.context() as m:
+        serve_plain_events(m)
+        plan = _plan(spark, sf_dir, "q89_rolling_time_features")
     assert plan.count("hashpartitioning(") == 1, plan
     assert "rangepartitioning" not in plan
     assert "Join" not in plan
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_LANDING", "1")
     plan = _plan(spark, sf_dir, "q89_rolling_time_features")
     assert plan.count("hashpartitioning(") == 0, plan
 
@@ -375,7 +392,7 @@ def test_q105_funnel_executes_once(spark, sf_dir, monkeypatch):
     # Asserted on the ad-hoc shape (exactly one user exchange); the
     # landed default has ZERO (covered by the routed-family sweep), and
     # a re-scan-per-transition regression would surface there as >0.
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_LANDING", "0")
+    serve_plain_events(monkeypatch)
     plan = _plan(spark, sf_dir, "q105_funnel_latency")
     user_exchanges = [
         ln for ln in plan.splitlines() if "hashpartitioning(user_id" in ln
@@ -693,17 +710,9 @@ def test_registry_dedup_family_runs_the_landed_plan(spark, sf_dir):
     landed, exchange-free-join plan (r10 verdict item #3 'done'
     criterion): q35/q119 through __spark_entry__'s registry may not
     hash-partition on the join key g below their self-join — the landing
-    provides the co-location. Also locks the default-on switch: if
-    _docs_shingle_rel silently stopped landing (env regression, key
-    drift), the ad-hoc plan's g-exchange would reappear here."""
-    import os as _os
-
-    import pytest as _pytest
-
-    if _os.environ.get("SPARK_GRAFT_DEDUP_LANDING", "1") == "0":
-        # the documented A/B opt-out is a legitimate environment, not a
-        # code defect — skip rather than fail the suite under it
-        _pytest.skip("dedup landing disabled via SPARK_GRAFT_DEDUP_LANDING=0")
+    provides the co-location. Also locks the routing: if
+    _docs_shingle_rel silently stopped landing (key drift), the ad-hoc
+    plan's g-exchange would reappear here."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -781,10 +790,8 @@ def test_shared_shingle_relation_recovers_stale_warehouse_dir(spark, sf_dir):
     import hashlib as _hashlib
     import os as _os
 
-    from franzoxide_spark.operators.dedup import (
-        _LANDING_MARKER,
-        shared_shingle_relation,
-    )
+    from franzoxide_spark.operators.dedup import shared_shingle_relation
+    from franzoxide_spark.operators.landing import _LANDING_MARKER
     from franzoxide_spark.tables import table
 
     key = f"{sf_dir}/documents#test_stale_recovery"
@@ -830,10 +837,10 @@ def test_shared_shingle_relation_adopts_fresh_marked_landing(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from franzoxide_spark.operators.dedup import (
-        _LANDING_MARKER,
         jaccard_pairs,
         shared_shingle_relation,
     )
+    from franzoxide_spark.operators.landing import _LANDING_MARKER
     from franzoxide_spark.tables import table
 
     docs = table(spark, sf_dir, "documents").limit(500)
@@ -911,10 +918,8 @@ def test_shared_shingle_relation_relands_on_fingerprint_mismatch(
     import os as _os
     import shutil as _shutil
 
-    from franzoxide_spark.operators.dedup import (
-        _LANDING_MARKER,
-        shared_shingle_relation,
-    )
+    from franzoxide_spark.operators.dedup import shared_shingle_relation
+    from franzoxide_spark.operators.landing import _LANDING_MARKER
     from franzoxide_spark.tables import table
 
     docs = table(spark, sf_dir, "documents").limit(500)
@@ -949,7 +954,7 @@ def test_shared_shingle_relation_relands_on_fingerprint_mismatch(
             _os.remove(crc)
         before = set(_glob.glob(dir_b + "/*.parquet"))
         with caplog.at_level(_logging.WARNING,
-                             logger="franzoxide_spark.operators.dedup"):
+                             logger="franzoxide_spark.operators.landing"):
             rel_b = shared_shingle_relation(
                 docs, "text", "doc_id", source_key=key_b, n_buckets=8
             )
@@ -1060,11 +1065,15 @@ def test_shared_shingle_relation_relands_on_file_census_mismatch(
         if _os.path.exists(crc):
             _os.remove(crc)
         with caplog.at_level(_logging.WARNING,
-                             logger="franzoxide_spark.operators.dedup"):
+                             logger="franzoxide_spark.operators.landing"):
             rel_b = shared_shingle_relation(
                 docs, "text", "doc_id", source_key=key_b, n_buckets=8
             )
-        assert any("file census" in r.message for r in caplog.records)
+        assert any(
+            r.message.startswith("shingle landing")
+            and "file census" in r.message
+            for r in caplog.records
+        )
         # re-landed, not adopted-short: the full row set is back
         assert rel_b.count() == want_rows
         assert len(_glob.glob(dir_b + "/part-*.parquet")) == 8
@@ -1087,7 +1096,9 @@ def test_landing_guard_refuses_unmarked_fresh_dir_reclaims_old(spark):
 
     import pytest as _pytest
 
-    from franzoxide_spark.operators.dedup import _clear_stale_table_location
+    from franzoxide_spark.operators.landing import (
+        _clear_stale_table_location,
+    )
 
     name = "shingle_rel_guardtest000"
     wh = str(spark.conf.get("spark.sql.warehouse.dir")).removeprefix("file:")
@@ -1097,9 +1108,12 @@ def test_landing_guard_refuses_unmarked_fresh_dir_reclaims_old(spark):
     with open(part, "wb") as f:
         f.write(b"mid-write")
     try:
-        # fresh + unmarked -> possibly live writer -> loud refusal
-        with _pytest.raises(RuntimeError, match="another session"):
-            _clear_stale_table_location(spark, name)
+        # fresh + unmarked -> possibly live writer -> loud refusal,
+        # naming the landing's family
+        with _pytest.raises(
+            RuntimeError, match="^events-landing location.*another session"
+        ):
+            _clear_stale_table_location(spark, name, "events")
         assert _os.path.exists(part), "guard deleted a fresh unmarked dir"
         # liveness is judged RECURSIVELY (r12 review): a live saveAsTable
         # writes under _temporary/ without bumping top-level mtimes, so
@@ -1115,11 +1129,11 @@ def test_landing_guard_refuses_unmarked_fresh_dir_reclaims_old(spark):
                   _os.path.dirname(_os.path.dirname(attempt))):
             _os.utime(p, (old, old))
         with _pytest.raises(RuntimeError, match="another session"):
-            _clear_stale_table_location(spark, name)
+            _clear_stale_table_location(spark, name, "shingle")
         # age the nested file too -> crashed-writer reclaim
         _os.utime(attempt, (old, old))
         _os.utime(fresh_part, (old, old))
-        _clear_stale_table_location(spark, name)
+        _clear_stale_table_location(spark, name, "shingle")
         assert not _os.path.exists(loc)
     finally:
         if _os.path.exists(loc):
@@ -1266,7 +1280,7 @@ def test_plan_size_bytes_never_raises(spark):
     """r14 ADVICE: the landing telemetry's Catalyst-stats read is
     diagnostics-only — a JVM-side failure must yield None, never break
     the adopt/land product path."""
-    from franzoxide_spark.operators.dedup import _plan_size_bytes
+    from franzoxide_spark.operators.landing import _plan_size_bytes
 
     df = spark.range(10)
     n = _plan_size_bytes(df)
@@ -1281,31 +1295,26 @@ def test_plan_size_bytes_never_raises(spark):
     assert _plan_size_bytes(df2) is None
 
 
-def test_q177_ttl_dedup_single_key_exchange_no_join(spark, sf_dir):
+def test_q177_ttl_dedup_single_key_exchange_no_join(
+    spark, sf_dir, monkeypatch
+):
     """r15 unfreeze #1a plan shape: the batch TTL-session dedup is ONE
     user-key exchange feeding window + group work — no join, no second
     shuffle of the events table (the lag/running-sum and the session
     group-by reuse the same key partitioning). Since the r16 routing
     the default reads the key-bucketed landing and has ZERO exchanges;
-    the ad-hoc lever shows the single raw-key exchange the landing
+    the plain events scan shows the single raw-key exchange the landing
     elides."""
-    import pytest as _pytest
-
-    if os.environ.get("SPARK_GRAFT_EVENTS_LANDING", "1") == "0":
-        _pytest.skip("events landing disabled via env")
     plan = _plan(spark, sf_dir, "q177_ttl_session_dedup")
     assert "Join" not in plan, plan
     assert plan.count("+- Exchange") == 0, plan
-    os.environ["SPARK_GRAFT_EVENTS_LANDING"] = "0"
-    try:
-        plan = _plan(spark, sf_dir, "q177_ttl_session_dedup")
-        assert "Join" not in plan, plan
-        assert plan.count("+- Exchange") == 1, plan
-        # the op partitions on the RAW key (r15: cast only in the output
-        # select — exactly what lets the landing elide this exchange)
-        assert "hashpartitioning(__k" in plan, plan
-    finally:
-        os.environ["SPARK_GRAFT_EVENTS_LANDING"] = "1"
+    serve_plain_events(monkeypatch)
+    plan = _plan(spark, sf_dir, "q177_ttl_session_dedup")
+    assert "Join" not in plan, plan
+    assert plan.count("+- Exchange") == 1, plan
+    # the op partitions on the RAW key (r15: cast only in the output
+    # select — exactly what lets the landing elide this exchange)
+    assert "hashpartitioning(__k" in plan, plan
 
 
 def test_q178_neardup_gate_no_cartesian(spark, sf_dir):
@@ -1363,15 +1372,12 @@ def test_bucketed_events_make_ttl_dedup_exchange_free(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS ev_bucketed_plan_test")
 
 
-def test_retrieval_landed_plans_serve_from_the_index(
-    spark, sf_dir, monkeypatch
-):
-    # r16 posting landing: with the landing on (default), q137/q157 have
+def test_retrieval_landed_plans_serve_from_the_index(spark, sf_dir):
+    # r16 posting landing: through the landing, q137/q157 have
     # NO exchange keyed on the posting build's keys — the corpus-wide
     # (doc, term) combine happened at landing time and df is baked into
     # the index, so the only exchanges left are candidate-bounded
     # (per-(query, doc) score combine + per-query top-k windows)
-    monkeypatch.setenv("SPARK_GRAFT_RETRIEVAL_LANDING", "1")
     for name in ("q137_bm25_topk", "q157_hybrid_rrf"):
         plan = _plan(spark, sf_dir, name)
         # the posting-build exchange is keyed (doc_id, term); the tiny
@@ -1393,9 +1399,9 @@ def test_retrieval_landed_plans_serve_from_the_index(
 def test_retrieval_ad_hoc_keeps_the_posting_shuffle(
     spark, sf_dir, monkeypatch
 ):
-    # the opt-out lever works: ad-hoc builds the (doc, term) posting
-    # combine in-plan — one corpus-keyed exchange present
-    monkeypatch.setenv("SPARK_GRAFT_RETRIEVAL_LANDING", "0")
+    # with no posting landing the (doc, term) posting combine is built
+    # in-plan — one corpus-keyed exchange present
+    serve_adhoc_postings(monkeypatch)
     plan = _plan(spark, sf_dir, "q137_bm25_topk")
     posting_ex = [
         ln for ln in plan.splitlines()
@@ -1424,18 +1430,25 @@ def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
     orderkey join through orderkey-bucketed landings, and the join plan
     carries no Exchange. Each side keeps exactly one in-partition Sort
     above its bucketed scan (the bucketed scan's output ordering is left
-    off on purpose, operators/dedup.py). Forced on at fixture scale (the
-    size gate keeps bench SFs on the plain broadcast-join scans); rows
-    must be identical to the plain scans."""
+    off on purpose, operators/dedup.py). Forced on at fixture scale
+    through the gate's threshold (the size gate keeps bench SFs on the
+    plain broadcast-join scans); rows must be identical to the plain
+    scans."""
     import re
 
+    from franzoxide_spark.operators import landing
     from franzoxide_spark.operators.landing import fact_join_relations
 
-    monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "force")
-    monkeypatch.setenv("SPARK_GRAFT_FACTS_BUCKETS", "4")
-    li, o = fact_join_relations(
-        spark, sf_dir, "lineitem", "orders", "l_orderkey", "o_orderkey"
-    )
+    def relations(threshold_bytes):
+        with monkeypatch.context() as m:
+            m.setattr(landing, "_broadcast_threshold_bytes",
+                      lambda spark: threshold_bytes)
+            return fact_join_relations(
+                spark, sf_dir, "lineitem", "orders",
+                "l_orderkey", "o_orderkey",
+            )
+
+    li, o = relations(1)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -1448,11 +1461,10 @@ def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
         assert "SortMergeJoin" in plan, plan
         sorts = re.findall(r"\bSort \[(\w+)#", plan)
         assert sorted(sorts) == ["l_orderkey", "o_orderkey"], plan
-        # identity vs the ungated plain scans
-        monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "0")
-        pli, po = fact_join_relations(
-            spark, sf_dir, "lineitem", "orders", "l_orderkey", "o_orderkey"
-        )
+        # identity vs the plain scans
+        pli, po = relations(1 << 62)
+        assert "fact_rel_" not in pli._jdf.queryExecution().logical() \
+            .toString()
         pj = pli.select("l_orderkey", "l_suppkey").join(
             po.select("o_orderkey", "o_custkey"),
             pli["l_orderkey"] == po["o_orderkey"],
@@ -1462,8 +1474,20 @@ def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+@pytest.fixture
+def drop_new_tables(spark):
+    """Drop the catalog tables a test lands over ``tmp_path`` inputs:
+    their idents are new on every run, so the session warehouse would
+    otherwise keep one more landing directory per run."""
+    before = {t.name for t in spark.catalog.listTables()}
+    yield
+    for t in spark.catalog.listTables():
+        if t.name not in before and not t.isTemporary:
+            spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
+
+
 def test_fact_landings_of_same_named_keys_do_not_collide(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, drop_new_tables
 ):
     """Two fact tables keyed on a column of the same name land as two
     tables: the landing identity carries the table, so the in-session
@@ -1471,6 +1495,7 @@ def test_fact_landings_of_same_named_keys_do_not_collide(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from franzoxide_spark.operators import landing
     from franzoxide_spark.operators.landing import fact_join_relations
 
     pq.write_table(
@@ -1481,8 +1506,9 @@ def test_fact_landings_of_same_named_keys_do_not_collide(
         pa.table({"k": [2, 3, 4, 5], "v": ["o2", "o3", "o4", "o5"]}),
         str(tmp_path / "orders.parquet"),
     )
-    monkeypatch.setenv("SPARK_GRAFT_FACTS_LANDING", "force")
-    monkeypatch.setenv("SPARK_GRAFT_FACTS_BUCKETS", "4")
+    monkeypatch.setattr(
+        landing, "_broadcast_threshold_bytes", lambda spark: 1
+    )
     left, right = fact_join_relations(
         spark, str(tmp_path), "lineitem", "orders", "k", "k"
     )
@@ -1492,6 +1518,40 @@ def test_fact_landings_of_same_named_keys_do_not_collide(
 
     assert rows(left) == [(1, "l1"), (2, "l2"), (3, "l3")]
     assert rows(right) == [(2, "o2"), (3, "o3"), (4, "o4"), (5, "o5")]
+
+
+def test_fact_gate_sizes_uri_inputs_from_the_scan(
+    spark, tmp_path, monkeypatch, drop_new_tables
+):
+    """The fact gate sizes each side from its scan's Catalyst stats, so
+    a ``file://`` (or any URI) ``sf_dir`` is sized like a plain path: past
+    the threshold both sides come back as landed tables. Sizing from a
+    local directory walk read 0 bytes for a URI and never landed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from franzoxide_spark.operators import landing
+
+    pq.write_table(
+        pa.table({"k": [1, 2, 3], "v": ["l1", "l2", "l3"]}),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    pq.write_table(
+        pa.table({"k": [2, 3, 4], "v": ["o2", "o3", "o4"]}),
+        str(tmp_path / "orders.parquet"),
+    )
+    monkeypatch.setattr(
+        landing, "_broadcast_threshold_bytes", lambda spark: 1
+    )
+    left, right = landing.fact_join_relations(
+        spark, f"file://{tmp_path}", "lineitem", "orders", "k", "k"
+    )
+    for df in (left, right):
+        plan = df._jdf.queryExecution().logical().toString()
+        assert "fact_rel_" in plan, plan
+    assert sorted(tuple(r) for r in left.select("k", "v").collect()) == [
+        (1, "l1"), (2, "l2"), (3, "l3")
+    ]
 
 
 def test_fact_landing_size_gate_stays_off_at_fixture_scale(spark, sf_dir):

@@ -140,22 +140,24 @@ def test_bm25_plan_is_inverted_index_shaped(spark, sf_dir, monkeypatch):
     broadcast (the query terms) remains. Either way no sort-merge
     machinery and no nested-loop join over the corpus."""
     from franzoxide_spark.queries import QUERIES, load_all
+    from tests.test_plans import serve_adhoc_postings
 
     load_all()
 
-    def _plan_for(env):
-        monkeypatch.setenv("SPARK_GRAFT_RETRIEVAL_LANDING", env)
+    def _plan():
         df = QUERIES["q137_bm25_topk"](spark, sf_dir)
         return df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted")
         )
 
-    plan = _plan_for("0")
+    with monkeypatch.context() as m:
+        serve_adhoc_postings(m)
+        plan = _plan()
     assert plan.count("BroadcastHashJoin") >= 3, plan
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    plan = _plan_for("1")
+    plan = _plan()
     # formatted mode prints each node twice (tree + details): one join
     assert plan.count("BroadcastHashJoin") == 2, plan
     assert "SortMergeJoin" not in plan, plan
