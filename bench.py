@@ -333,7 +333,7 @@ PER_QUERY_NOTES = {
         "position ~0.6 s vs a ~0.01 s oracle is multi-agg floor"
     ),
     "q86_source_js_divergence": (
-        "per-source token histograms via corpus_stats, which _fan_outs "
+        "per-source token histograms via corpus_stats, which fans out "
         "internally — feeding it the persisted fanned relation added "
         "materialization without adding parallelism (bench-protocol "
         "A/B: 1.52 fanned vs 0.58 plain; the q92/q85 pattern), "

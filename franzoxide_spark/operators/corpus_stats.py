@@ -53,33 +53,7 @@ from franzoxide_spark.functions.text import (
     sql_tokens,
     tokens,
 )
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Round-robin the input across the session's shuffle parallelism when
-    the scan gives fewer partitions.
-
-    Every operator here explodes each document into 100s-1000s of rows
-    (tokens / trigrams / bigrams), so input parallelism — not data size —
-    bounds the whole job: the sf fixtures are single parquet files with
-    one row group, which Spark cannot split, so without this the entire
-    explode+aggregate pipeline runs on ONE core (measured 3-5x slower at
-    sf0.1). On a real multi-file / multi-row-group corpus the scan already
-    yields >= parallelism partitions and this is a no-op; the guarded
-    repartition only ever shuffles the SMALL pre-explode rows.
-
-    Guarded on FILE count when the input is a file scan (r18): parquet
-    splits only at row-group boundaries, so a few single-row-group
-    files plan `target` splits while all rows sit in a handful of
-    non-empty tasks — the planned-split count over-reports exactly when
-    the fan-out matters (measured on q104's x30 replica: 6 files
-    planned as 32 splits, repartition 13.3 s vs plain 23.7 s).
-    Partition count still guards non-file inputs (test frames)."""
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    files = df.inputFiles()
-    if (len(files) if files else df.rdd.getNumPartitions()) < target:
-        return df.repartition(target)
-    return df
-
+from franzoxide_spark.tables import ensure_parallel
 
 # --------------------------------------------------------------------------
 # TF-IDF top terms
@@ -118,9 +92,9 @@ def tfidf_top_terms(
     (one fewer corpus-sized exchange, no unsplittable hot-term window
     partition).
     """
-    # No _fan_out here: unlike the LM/DSIR scoring scans, every stage
-    # after the explode is itself a shuffle, so input parallelism does
-    # not bound the job and the extra round-robin exchange only costs
+    # No ensure_parallel here: unlike the LM/DSIR scoring scans, every
+    # stage after the explode is itself a shuffle, so input parallelism
+    # does not bound the job and the extra round-robin exchange only costs
     # (measured 0.97 s vs 1.50 s at sf0.1 with it).
     toks = docs.select(id_col, tokens(text_col).alias("__toks"))
     terms = toks.select(id_col, F.explode("__toks").alias("term"))
@@ -213,7 +187,7 @@ def char_trigram_lm(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     cross-engine libm ULP drift); the mean is rounded to 4.
     """
     tri = (
-        _fan_out(docs)
+        ensure_parallel(docs)
         .select(
             id_col, F.explode(F.expr(_char_trigrams_expr(text_col))).alias("tri")
         )
@@ -294,7 +268,7 @@ def dsir_logratio(
     Documents with <2 tokens have no bigrams and drop out (mirrored by
     the oracle's inner join).
     """
-    toks = _fan_out(docs).select(
+    toks = ensure_parallel(docs).select(
         id_col, target_pred.alias("__is_tgt"), tokens(text_col).alias("__toks")
     )
     grams = toks.select(
@@ -404,7 +378,7 @@ def oov_rate(
     the corpus-sized token stream shuffles exactly once, on the id, with
     map-side combine.
     """
-    toks = _fan_out(docs.select(id_col, text_col)).select(
+    toks = ensure_parallel(docs.select(id_col, text_col)).select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("__w")
     )
     counts = toks.groupBy("__w").agg(F.count("*").alias("__c"))
@@ -609,7 +583,7 @@ def vocab_encode(
     into an Arrow-batched UDF and emit the id array map-side — the
     join+regroup form here is the one DuckDB can mirror bit-for-bit.
     """
-    toks = _fan_out(docs.select(id_col, text_col)).select(
+    toks = ensure_parallel(docs.select(id_col, text_col)).select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("__t")
     )
     cnt = (
@@ -694,7 +668,7 @@ def vocab_encode_mapside(
     :func:`vocab_encode` is asserted in tests/test_corpus_stats.py.
     """
     cnt = (
-        _fan_out(docs.select(text_col))
+        ensure_parallel(docs.select(text_col))
         .select(F.explode(F.split(F.col(text_col), " ")).alias("__tok"))
         .groupBy("__tok")
         .agg(F.count("*").alias("__c"))
@@ -732,7 +706,7 @@ def vocab_encode_mapside(
                 }
             )
 
-    return _fan_out(docs.select(id_col, text_col)).mapInPandas(
+    return ensure_parallel(docs.select(id_col, text_col)).mapInPandas(
         _encode, schema=out_schema
     )
 

@@ -39,8 +39,8 @@ from franzoxide_spark.functions.text import (
     shingles,
     tokens,
 )
-from franzoxide_spark.operators.corpus_stats import _fan_out
 from franzoxide_spark.operators.landing import shared_landing
+from franzoxide_spark.tables import ensure_parallel, plan_size_bytes
 
 
 def _shingle_hash_arrays(
@@ -526,7 +526,7 @@ def simhash_near_duplicates(
     # sweep purely from this. Project the two consumed columns and
     # round-robin them to the session's parallelism first; on a real
     # multi-split corpus the repartition is a no-op.
-    src = _fan_out(df.select(id_col, text_col))
+    src = ensure_parallel(df.select(id_col, text_col))
     # The signature is an interpreted higher-order-function expression;
     # without a pipeline break it would be re-evaluated per band row on
     # BOTH sides of the self-join (measured: ~70x slower). Caching the
@@ -781,10 +781,8 @@ def jaccard_pairs_prefix(
     forced = prefix_checkpoint is not None
     est = None
     if prefix_checkpoint is None:
-        est = int(
-            ex._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        prefix_checkpoint = est >= _PREFIX_CHECKPOINT_MIN_BYTES
+        est = plan_size_bytes(ex)
+        prefix_checkpoint = (est or 0) >= _PREFIX_CHECKPOINT_MIN_BYTES
     if len(PREFIX_DECISIONS) < 1000:
         import time as _time
 
@@ -1061,9 +1059,10 @@ def edit_distance_near_duplicates(
     # same join without the edit distance). Explicit repartition to the
     # session's parallelism, with persist() as the pushdown barrier so
     # the rel_edit filter cannot sink back below the exchange onto the
-    # coalesced side (the _fan_out pattern; persist not localCheckpoint
-    # because the relation is tiny — full plan stays visible and the
-    # blocks recompute gracefully after an external cache clear).
+    # coalesced side (persist not localCheckpoint because the relation
+    # is tiny — full plan stays visible and the blocks recompute
+    # gracefully after an external cache clear). Not ensure_parallel: a
+    # join output has no plan-time split count (tables.ensure_parallel).
     cand = (
         pairs.join(ta, "id_a")
         .join(tb, "id_b")

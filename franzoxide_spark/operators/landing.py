@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from franzoxide_spark.tables import plan_size_bytes, table
+
 
 # Session-level write-once switch (r10 verdict item #3): the first
 # call per (session, family ident) lands the bucketed relation; later
@@ -401,7 +403,7 @@ def shared_landing(
             if adopted is not None:
                 _landing_event(
                     "adopted", name,
-                    stat_bytes=_plan_size_bytes(adopted),
+                    stat_bytes=plan_size_bytes(adopted),
                     writer=marker.get("app_id"),
                 )
                 _SESSION_LANDINGS[key] = name
@@ -430,7 +432,7 @@ def shared_landing(
     )
     _landing_event(
         "re-landed" if relanded else "written", name,
-        stat_bytes=_plan_size_bytes(rel),
+        stat_bytes=plan_size_bytes(rel),
         # build wall-clock (r17 VERDICT #1): bench.py sums these into the
         # printed landing_build_s so the one-line artifact itself states
         # how much landing-write time this run paid (adoption pays none)
@@ -439,19 +441,6 @@ def shared_landing(
     _SESSION_LANDINGS[key] = name
     _SESSION_LANDING_DFS[key] = rel
     return rel
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst stats size of ``df``'s optimized plan, or ``None`` when
-    the JVM call fails. It feeds the landing telemetry and the fact-join
-    size gate, so a failure must never break the adopt/land product
-    path (r14 ADVICE: the call sat outside any exception guard)."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — a stats read must never fail a query
-        return None
 
 
 def land_events_relation(
@@ -640,12 +629,10 @@ def fact_join_relations(
     scale-adaptive: ~128 MB of the larger side per bucket, clamped to
     [16, 4096] and rounded to a power of two so replica decades reuse
     counts."""
-    from franzoxide_spark.tables import table
-
     left = table(spark, sf_dir, left_name)
     right = table(spark, sf_dir, right_name)
-    lb = _plan_size_bytes(left)
-    rb = _plan_size_bytes(right)
+    lb = plan_size_bytes(left)
+    rb = plan_size_bytes(right)
     if lb is None or rb is None:
         return left, right
     lb_pruned = lb * (

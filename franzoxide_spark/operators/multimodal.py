@@ -23,6 +23,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from franzoxide_spark.tables import ensure_parallel
+
 MEDIA_SCHEMA = (
     "doc_id bigint, media binary, "
     "meta struct<width:int, height:int, format:string>"
@@ -73,9 +75,7 @@ def synthesize_bmp_media(docs: DataFrame) -> DataFrame:
                 {"doc_id": pdf["doc_id"], "media": media, "meta": metas}
             )
 
-    from franzoxide_spark.operators.corpus_stats import _fan_out
-
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
+    return ensure_parallel(docs.select("doc_id", "text")).mapInPandas(
         run, schema=out_schema
     )
 
@@ -135,9 +135,7 @@ def synthesize_raster_media(docs: DataFrame) -> DataFrame:
     # the single-row-group fixture parquet scans as ONE partition, which
     # would run every Python-side encode AND the downstream decode chain
     # on one core (mapInPandas preserves partitioning) — fan out first
-    from franzoxide_spark.operators.corpus_stats import _fan_out
-
-    return _fan_out(docs.select("doc_id", "text")).mapInPandas(
+    return ensure_parallel(docs.select("doc_id", "text")).mapInPandas(
         run, schema=out_schema
     )
 

@@ -452,7 +452,7 @@ def bloom_probe_report_flagged(
     hashed = F.expr(
         f"transform(__sh, s -> {HASH60_SPARK.format(s='s')})"
     )
-    # no _fan_out: the stage after the explode is itself a shuffle, so
+    # no ensure_parallel: the stage after the explode is itself a shuffle, so
     # input parallelism does not bound the job (same reasoning as
     # corpus_stats' LM scorers measured at sf0.1)
     per_g = (

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from franzoxide_spark.functions.text import hash60, sql_hash60
-from franzoxide_spark.operators.corpus_stats import _fan_out
+from franzoxide_spark.tables import ensure_parallel
 
 
 # --------------------------------------------------------------------------
@@ -128,11 +128,11 @@ def crossdoc_span_coverage(
     The gram transform is an interpreted higher-order function (Catalyst
     does not codegen ``transform``/``slice``), i.e. CPU-bound map work —
     so a scan that under-parallelizes (one small parquet file → one
-    task) serializes it. ``_fan_out`` (operators/corpus_stats.py)
-    repartitions only in that case; with real input splits (any 100 TB
-    layout) it is a no-op and the operator adds no pre-shuffle.
+    task) serializes it. ``tables.ensure_parallel`` repartitions only
+    in that case; with real input splits (any 100 TB layout) it is a
+    no-op and the operator adds no pre-shuffle.
     """
-    toks = _fan_out(docs.select(id_col, text_col)).select(
+    toks = ensure_parallel(docs.select(id_col, text_col)).select(
         F.col(id_col),
         F.split(F.col(text_col), " ").alias("__t"),
     )

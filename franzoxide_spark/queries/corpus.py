@@ -556,14 +556,13 @@ def q77(spark: SparkSession, sf_dir: str) -> DataFrame:
         maxabs_scale,
         quantize_int8,
     )
-    from franzoxide_spark.operators.corpus_stats import _fan_out
 
     # the quantization expressions are interpreted HOFs (CPU-bound
-    # map work): spread a single-file scan across cores — no-op with
-    # real input splits. Project the scale ONCE per row; inlining it in
-    # the mse/max_code lambdas re-runs the O(dim) fold per element
-    # (O(dim^2) per vector, ~3x wall at dim=64).
-    emb = _fan_out(fanned_table(spark, sf_dir, "embeddings")).withColumn(
+    # map work): the fanned relation spreads a single-file scan across
+    # cores — no-op with real input splits. Project the scale ONCE per
+    # row; inlining it in the mse/max_code lambdas re-runs the O(dim)
+    # fold per element (O(dim^2) per vector, ~3x wall at dim=64).
+    emb = fanned_table(spark, sf_dir, "embeddings").withColumn(
         "_s", F.expr(maxabs_scale("embedding"))
     )
     codes = quantize_int8("embedding", scale="_s")

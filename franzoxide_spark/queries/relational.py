@@ -25,7 +25,7 @@ from franzoxide_spark.functions.numeric import (
     sql_dsum,
 )
 from franzoxide_spark.queries import register
-from franzoxide_spark.tables import fanned_table, table
+from franzoxide_spark.tables import ensure_parallel, fanned_table, table
 
 SHIP_CUTOFF = "1998-09-02"
 
@@ -766,11 +766,9 @@ def q104(spark: SparkSession, sf_dir: str) -> DataFrame:
     # OPTIMIZATION_r18.md). The sliver projection rides the round-robin
     # exchange instead (column pruning pushes through repartition), so
     # the hash pass parallelizes without caching anything. Guarded on
-    # file count (corpus_stats._fan_out): on a real multi-split table the
-    # repartition is a no-op.
-    from franzoxide_spark.operators.corpus_stats import _fan_out
-
-    li = _fan_out(table(spark, sf_dir, "lineitem").select(*_Q104_COLS))
+    # the split count (tables.ensure_parallel): on a real multi-split
+    # table the repartition is a no-op.
+    li = ensure_parallel(table(spark, sf_dir, "lineitem").select(*_Q104_COLS))
     # NULL columns must render identically on both engines: Spark's
     # concat_ws SKIPS nulls while a '||' chain propagates them (md5(NULL)
     # = NULL, so SUM would silently drop the row from the very tool meant

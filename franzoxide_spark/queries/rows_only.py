@@ -52,23 +52,17 @@ def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (which the batch oracle already locks)."""
     from franzoxide_spark.operators.curation import decontaminate_stream
 
-    docs = table(spark, sf_dir, "documents")
-    # Fan the single-file fixture scan out to the cores: the probe chain
-    # (split -> gram hashes -> Arrow probe) is CPU-bound and the sf0.1
-    # corpus is ONE parquet file = one input split, so without this the
-    # whole pass ran single-threaded — the r15 "Arrow transfer wall"
-    # was in fact this parallelism wall (BASELINE.md r16 'q56'). The
-    # lazy localCheckpoint is the pushdown BARRIER: Catalyst pushes a
-    # deterministic UDF filter straight through a bare repartition back
-    # onto the 1-task scan side (measured: plan showed the whole chain
-    # below the exchange). At real scale the corpus arrives in
-    # thousands of splits and neither is needed — the operator itself
-    # stays one-pass/shuffle-free by contract (and streaming-legal:
-    # this is the batch face's fixture shim only).
-    pool = (
-        docs.filter(F.col("doc_id") % 97 != 0)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint(eager=False)
+    # The fanned relation spreads the single-file fixture scan over the
+    # cores: the probe chain (split -> gram hashes -> Arrow probe) is
+    # CPU-bound, and on one input split the r15 "Arrow transfer wall"
+    # was in fact a parallelism wall (BASELINE.md r16 'q56'). Its cache
+    # is the pushdown barrier: over a bare repartition Catalyst pushes
+    # the deterministic UDF filter back onto the 1-task scan side. At
+    # real scale the corpus arrives in thousands of splits and
+    # fanned_table is the plain scan; the operator itself stays
+    # one-pass/shuffle-free (and streaming-legal) by contract.
+    pool = fanned_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % 97 != 0
     )
     hashes = _q56_eval_hashes(spark, sf_dir)
     return decontaminate_stream(pool, hashes).select("doc_id")

@@ -124,42 +124,82 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst stats size of ``df``'s optimized plan, or ``None`` when
+    the JVM call fails. Every size-based decision reads sizes here (the
+    landing telemetry and fact gate, dedup's prefix checkpoint, the
+    fan-out gates), so a failed stats read must never break a query."""
+    try:
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:  # noqa: BLE001 — a stats read must never fail a query
+        return None
+
+
+def ensure_parallel(df: DataFrame) -> DataFrame:
+    """``df`` round-robined to the session's parallelism when its input
+    is narrow, else ``df`` itself — the package's one fan-out rule.
+
+    Why: each sf fixture is one parquet file with one row group, which
+    Spark cannot split, so a CPU-bound map pass (tokenize/explode,
+    interpreted higher-order functions, Python UDFs) over the plain scan
+    runs on ONE core (measured 3-5x slower at sf0.1). Target:
+    ``defaultParallelism`` (``get_spark`` sets shuffle partitions to it).
+
+    Narrow: fewer splits than the target. A file scan counts
+    ``max(files, ceil(plan_size_bytes / spark.sql.files.maxPartitionBytes))``
+    (files alone when the size read fails): parquet splits only at row
+    groups, so a few single-row-group files plan ``target`` splits with
+    all rows in a handful of tasks (r18, q104's x30 replica: 6 files
+    planned as 32 splits, repartition 13.3 s vs plain 23.7 s), while a
+    few multi-row-group files of 10 GB really do split. Other inputs
+    (test frames, cached relations) count partitions, so a fanned
+    relation passes through untouched.
+
+    The repartition is bare: a caller whose consumers filter must pin
+    it (``fanned_table``), or Catalyst pushes deterministic filters back
+    below the exchange. q88's verify (``operators/dedup.py``) spreads a
+    join output that AQE coalesces at run time, which no plan-time
+    count sees, so it repartitions unconditionally.
+    """
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    splits = len(files) if files else df.rdd.getNumPartitions()
+    size = plan_size_bytes(df) if files and splits < target else None
+    if size is not None:
+        conf = spark._jsparkSession.sessionState().conf()
+        splits = max(splits, -(-size // conf.filesMaxPartitionBytes()))
+    return df.repartition(target) if splits < target else df
+
+
 # Fanned-relation cache: one materialized fan-out per (session, sf_dir,
 # table), shared by every full-scan consumer in the session (same cost
 # model as the bucketed landings: pay once, serve many). Purged alongside
 # _CATALOG when a new application appears (ensure_session_confs).
 _FANOUT: dict[tuple[str, str, str], DataFrame] = {}
 
-# Identity-gate caps: fan out ONLY a scan that is both narrow (fewer
-# input splits than half the cores — at real scale corpora arrive in
-# thousands of splits and the helper must be a no-op) and small (Catalyst
-# stats under this many bytes — localCheckpoint materializes the whole
-# relation in the block manager, which is a fixture-shim move, never an
-# at-scale one).
+# Pin gate: fan out only a scan whose Catalyst stats fit under this many
+# bytes — the persist holds the whole relation in the block manager,
+# which is a fixture-shim move, never an at-scale one.
 _FANOUT_MAX_BYTES = 256 << 20
 
 
 def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Fixture shim: :func:`table`, fanned out to the session's cores.
-
-    The sf0.1 fixtures are ONE parquet file each (~0.6-11 MB), which
-    Spark plans as ONE input split — so a full-corpus map/agg pass
-    (regex ladders, tokenize, per-column profiling) runs single-threaded
-    on a 32-core session. The q56 batch face proved the fix and the
-    shape (queries/rows_only.py, BASELINE.md r16 'q56'): repartition to
-    the cores with a LAZY ``localCheckpoint`` as the pushdown barrier —
-    Catalyst otherwise pushes deterministic filters straight through a
-    bare repartition back onto the 1-task scan side.
+    """Fixture shim: :func:`table` through :func:`ensure_parallel`,
+    pinned once per session — the pin is the pushdown barrier the bare
+    repartition lacks (the q56 fix generalized, BASELINE.md r16 'q56').
 
     Contract: callers must be FULL-relation consumers. The cache is an
     optimizer boundary (plans over it scan the InMemoryRelation —
     filters stay above it), so a query that filters or projects a
     sliver of the table must keep reading :func:`table` (where
     PushedFilters/ReadSchema do the work — module docstring). Two
-    identity gates keep this a fixture-only move: a scan with >= cores/2
-    input splits, or one whose Catalyst-stats size exceeds
-    ``_FANOUT_MAX_BYTES``, is returned un-fanned (at 100 TB both gates
-    trip and this function IS :func:`table`).
+    identity gates keep this a fixture-only move: a scan
+    :func:`ensure_parallel` leaves alone, or one whose Catalyst-stats
+    size exceeds ``_FANOUT_MAX_BYTES``, is returned un-fanned (at
+    100 TB both gates trip and this function IS :func:`table`).
 
     ``persist()`` rather than ``localCheckpoint()`` deliberately: an
     externally cleared cache (``spark.catalog.clearCache()`` — bench.py
@@ -182,15 +222,13 @@ def fanned_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             pass
         return cached
     try:
-        cores = spark.sparkContext.defaultParallelism
-        if len(df.inputFiles()) >= max(2, cores // 2):
+        fanned = ensure_parallel(df)
+        if fanned is df:
             return df  # natural parallelism: keep the pushdown-able scan
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if size > _FANOUT_MAX_BYTES:
+        size = plan_size_bytes(df)
+        if size is None or size > _FANOUT_MAX_BYTES:
             return df  # too big to pin in the block manager
-        fanned = df.repartition(cores).persist()
+        fanned = fanned.persist()
     except Exception:  # noqa: BLE001 — the shim must never break a read
         return df
     _FANOUT[key] = fanned

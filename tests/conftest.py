@@ -18,3 +18,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def drop_new_tables(spark):
+    """Drop the catalog tables a test lands over ``tmp_path`` inputs:
+    their idents are new on every run, so the session warehouse would
+    otherwise keep one more landing directory per run."""
+    before = {t.name for t in spark.catalog.listTables()}
+    yield
+    for t in spark.catalog.listTables():
+        if t.name not in before and not t.isTemporary:
+            spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")

@@ -242,8 +242,8 @@ def test_vocab_encode_mapside_plan_has_no_corpus_shuffle(spark, sf_dir):
     df = vocab_encode_mapside(docs, "doc_id", "text", 50, 8)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # the encode side is map-only: no key shuffle, no join — the only
-    # Exchange allowed is _fan_out's round-robin split of a single small
-    # input file (a no-op with real input splits)
+    # Exchange allowed is tables.ensure_parallel's round-robin split of
+    # a single small input file (a no-op with real input splits)
     assert "MapInPandas" in plan
     assert "hashpartitioning" not in plan and "Join" not in plan
 

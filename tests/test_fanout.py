@@ -1,18 +1,22 @@
-"""tables.fanned_table — the session-memoized fan-out shim for
-single-split fixture scans (the generalized q56 fix, r16).
+"""tables.ensure_parallel — the one parallelism decision — and
+tables.fanned_table, the session-memoized fan-out shim built on it.
 
 Contract under test: row identity with the plain catalog relation,
 once-per-session materialization (same object back), the identity gates
-(many-split and oversized scans come back un-fanned), and actual
-parallelism (the fanned relation plans >1 partition where the plain
-scan plans 1)."""
+(many-split and oversized scans come back un-fanned, whether the splits
+are files or row groups), and actual parallelism (the fanned relation
+plans >1 partition where the plain scan plans 1)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from franzoxide_spark import tables
-from franzoxide_spark.tables import fanned_table, table
+from franzoxide_spark.tables import ensure_parallel, fanned_table, table
 
 
 def test_fanned_rows_identical_to_plain(spark, sf_dir):
@@ -95,16 +99,14 @@ def test_fanned_events_ts_normalization_preserved(spark, sf_dir):
 
 def test_fan_out_composes_with_fanned_table(spark, sf_dir):
     """r16 verdict #2 structural guard: a persisted fanned relation fed
-    to an operator that repartitions internally (corpus_stats._fan_out)
-    must pass through UNCHANGED — the eight r16-extension reverts showed
-    the double-materialization footgun (q155 1.38 vs 0.57 s). The guard
-    is _fan_out's partition-count check: at target parallelism it is the
-    identity, so the composed plan carries exactly ONE round-robin
-    exchange (the fanned_table one)."""
-    from franzoxide_spark.operators.corpus_stats import _fan_out
-
+    to an operator that repartitions internally (ensure_parallel) must
+    pass through UNCHANGED — the eight r16-extension reverts showed the
+    double-materialization footgun (q155 1.38 vs 0.57 s). The guard is
+    ensure_parallel's partition-count check on non-file inputs: at
+    target parallelism it is the identity, so the composed plan carries
+    exactly ONE round-robin exchange (the fanned_table one)."""
     fanned = fanned_table(spark, sf_dir, "documents")
-    out = _fan_out(fanned)
+    out = ensure_parallel(fanned)
     assert out is fanned  # identity: no second repartition on top
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     # the only round-robin exchange lives INSIDE the cached relation (the
@@ -117,5 +119,49 @@ def test_fan_out_composes_with_fanned_table(spark, sf_dir):
     # and on a plain single-split scan the operator's own fan-out still
     # fires (the at-scale no-op is the split-count gate, not this guard)
     plain = table(spark, sf_dir, "documents")
-    fanned_by_op = _fan_out(plain)
+    fanned_by_op = ensure_parallel(plain)
     assert fanned_by_op is not plain
+
+
+def test_scan_of_many_files_is_left_alone(spark, tmp_path):
+    """The file-count gate: a scan of at least ``defaultParallelism``
+    files already has its parallelism, so ensure_parallel returns it
+    unchanged and fanned_table serves the plain, pushdown-able scan."""
+    target = spark.sparkContext.defaultParallelism
+    path = tmp_path / "orders.parquet"
+    path.mkdir()
+    for i in range(target):
+        pq.write_table(
+            pa.table({"o_orderkey": [i]}), str(path / f"part-{i}.parquet")
+        )
+    plain = table(spark, str(tmp_path), "orders")
+    assert len(plain.inputFiles()) == target
+    assert ensure_parallel(plain) is plain
+    assert fanned_table(spark, str(tmp_path), "orders") is plain
+
+
+def test_one_file_of_many_row_groups_is_left_alone(spark, tmp_path):
+    """The split-count gate: parquet splits a file at row groups, so one
+    file whose row groups already give the scan ``defaultParallelism``
+    non-empty tasks comes back unchanged. Counting files alone read it
+    as one split and forced a full-data shuffle on it."""
+    target = spark.sparkContext.defaultParallelism
+    n_groups, rows = 2 * target, 4096
+    path = str(tmp_path / "wide.parquet")
+    pq.write_table(
+        pa.table({"v": pa.array(range(n_groups * rows), pa.int64())}),
+        path,
+        row_group_size=rows,
+        compression="none",
+    )
+    assert pq.ParquetFile(path).metadata.num_row_groups == n_groups
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(os.path.getsize(path) // n_groups))
+    try:
+        df = spark.read.parquet(path)
+        tasks = df.select(F.spark_partition_id()).distinct().count()
+        assert tasks >= target
+        assert ensure_parallel(df) is df
+    finally:
+        spark.conf.set(key, prev)

@@ -238,3 +238,57 @@ def test_shared_posting_relation_lands_once_with_index_metadata(
         assert abs(baked[0]["avgdl"] - live["avgdl"]) < 1e-9
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+# --------------------------------------------------------------------------
+# Landing identity: two sources over the same column names never collide
+# --------------------------------------------------------------------------
+def _land_posting(df, key):
+    from franzoxide_spark.operators.retrieval import shared_posting_relation
+
+    return shared_posting_relation(df, "id", "text", key, n_buckets=2)
+
+
+def _land_shingles(df, key):
+    from franzoxide_spark.operators.dedup import shared_shingle_relation
+
+    return shared_shingle_relation(df, "text", "id", key, n_buckets=2)
+
+
+_FAMILIES = {
+    "events": lambda df, key: shared_events_relation(
+        df, "id", "ts", key, n_buckets=2
+    ),
+    "posting": _land_posting,
+    "shingle": _land_shingles,
+}
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_landings_of_same_named_columns_do_not_collide(
+    family, spark, tmp_path, drop_new_tables
+):
+    """Two sources with the same column names land as two tables: each
+    family's ident carries its ``source_key``, so the in-session fast
+    path never serves the first source's landing for the second (the
+    fact family's collision, checked for the other three)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids_by_source = {"a": [1, 2, 3], "b": [4, 5]}
+    landed = {}
+    for name, ids in ids_by_source.items():
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(
+            pa.table({
+                "id": ids,
+                "ts": [10 * i for i in ids],
+                "text": [f"w{i} shared words here" for i in ids],
+            }),
+            path,
+        )
+        rel = _FAMILIES[family](spark.read.parquet(path), path)
+        landed[name] = sorted(
+            r["id"] for r in rel.select("id").distinct().collect()
+        )
+    assert landed == ids_by_source

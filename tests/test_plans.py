@@ -1277,13 +1277,13 @@ def test_compact_output_preserves_null_partition_rows(spark, tmp_path):
 
 
 def test_plan_size_bytes_never_raises(spark):
-    """r14 ADVICE: the landing telemetry's Catalyst-stats read is
-    diagnostics-only — a JVM-side failure must yield None, never break
-    the adopt/land product path."""
-    from franzoxide_spark.operators.landing import _plan_size_bytes
+    """r14 ADVICE: the one Catalyst-stats read (landing telemetry, the
+    fact and prefix-checkpoint gates, the fan-out gates) yields None on
+    a JVM-side failure, never breaking the query that asked."""
+    from franzoxide_spark.tables import plan_size_bytes
 
     df = spark.range(10)
-    n = _plan_size_bytes(df)
+    n = plan_size_bytes(df)
     assert isinstance(n, int) and n > 0
 
     class _Broken:
@@ -1292,7 +1292,7 @@ def test_plan_size_bytes_never_raises(spark):
 
     df2 = spark.range(1)
     df2._jdf = _Broken()
-    assert _plan_size_bytes(df2) is None
+    assert plan_size_bytes(df2) is None
 
 
 def test_q177_ttl_dedup_single_key_exchange_no_join(
@@ -1472,18 +1472,6 @@ def test_fact_landing_served_join_is_exchange_free(spark, sf_dir, monkeypatch):
         assert j.count() == pj.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-@pytest.fixture
-def drop_new_tables(spark):
-    """Drop the catalog tables a test lands over ``tmp_path`` inputs:
-    their idents are new on every run, so the session warehouse would
-    otherwise keep one more landing directory per run."""
-    before = {t.name for t in spark.catalog.listTables()}
-    yield
-    for t in spark.catalog.listTables():
-        if t.name not in before and not t.isTemporary:
-            spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
 
 
 def test_fact_landings_of_same_named_keys_do_not_collide(
