@@ -20,10 +20,13 @@ batch of 10 JSON records, then flush, then objects appear under
 
 Where the reference buffers in the Rust sink and uploads on flush
 (s3.rs:522-578), the Spark side buffers KafkaRecords driver-side and on
-flush materializes ONE DataFrame and writes it through the same prepare/
-partition/envelope plan the streaming ObjectSink uses — a batch write with
+flush materializes ONE DataFrame and writes it through the streaming
+ObjectSink's own write path (``ObjectSink.layout``, then
+``ObjectSink.configure`` or its bytes writer) — a batch write with
 identical layout, so pushed records and streamed records are
-indistinguishable to readers. Per-batch ingest stays O(batch) Python (the
+indistinguishable to readers. A pushed batch is never declared clustered
+by partition (``createDataFrame`` spreads rows regardless of it), so the
+layout shuffle always runs. Per-batch ingest stays O(batch) Python (the
 wire handed us Python objects already); everything from flush onward is
 JVM-side."""
 
@@ -33,24 +36,19 @@ import logging
 import time
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from franzoxide_spark.config import ConnectorConfig
 from franzoxide_spark.errors import ConfigError, SinkError
 from franzoxide_spark.ingest import protowire as pw
-from franzoxide_spark.sinks.object_sink import ObjectSink, _headers_json
-from franzoxide_spark.functions.envelope import envelope_json
-
-_RECORD_SCHEMA = (
-    "topic string, partition int, offset long, timestamp long,"
-    " key binary, value binary, headers map<string,string>"
-)
+from franzoxide_spark.sinks.object_sink import ObjectSink
+from franzoxide_spark.sources.kafka import KAFKA_RECORD_SCHEMA
 
 
 class PushBatchSink:
-    """Buffer-then-flush sink for pushed records, sharing ObjectSink's
-    layout logic (prepare/partition columns/envelope encoding) so the
-    on-disk result matches the streaming path byte-for-byte."""
+    """Buffer-then-flush sink for pushed records, written through
+    ObjectSink's one write path (layout columns, clustering, envelope
+    encoding, writer setup) so each partition directory holds the same
+    lines the streaming path writes for the same records."""
 
     def __init__(
         self, spark: SparkSession, connector: ConnectorConfig, checkpoint_root: str
@@ -85,7 +83,7 @@ class PushBatchSink:
         # meant a failed write dropped every buffered record while the
         # client's flush RETRY acked success over an empty buffer —
         # silent loss under the at-least-once contract (r13 review)
-        df = self.spark.createDataFrame(rows, _RECORD_SCHEMA)
+        df = self.spark.createDataFrame(rows, KAFKA_RECORD_SCHEMA)
         sink = self.sink
         if sink.format in ("json", "parquet"):
             # a streaming FileStreamSink governs its directory through
@@ -142,40 +140,11 @@ class PushBatchSink:
                     " invisible to Spark readers. Give the push"
                     " connector its own path.base/s3.prefix."
                 )
-        # _prepare derives the time/field partition columns (year/month/
-        # day/hour or the JSON-extracted partition.field) that
-        # _partition_cols references — without it every non-default
-        # partitioner flush failed with an unresolved-column
-        # AnalysisException (r14 advice: the call was dropped when the
-        # _spark_metadata guard was inserted)
-        df = sink._prepare(df)
-        parts = sink._partition_cols()
-        if parts:
-            df = df.repartition(*[F.col(c) for c in parts])
-        if sink.format == "json":
-            out = df.select(
-                *parts,
-                envelope_json(
-                    F.col("topic"),
-                    F.col("partition"),
-                    F.col("offset"),
-                    F.col("timestamp"),
-                    F.col("key"),
-                    F.col("value"),
-                    _headers_json(F.col("headers")),
-                ).alias("value"),
-            )
-            writer = out.write.partitionBy(*parts).mode("append")
-            if sink.compression:
-                writer = writer.option("compression", sink.compression)
-            writer.text(sink.path)
-        elif sink.format == "parquet":
-            writer = df.write.partitionBy(*parts).mode("append")
-            if sink.compression:
-                writer = writer.option("compression", sink.compression)
-            writer.parquet(sink.path)
-        else:  # bytes
-            sink._write_bytes_batch(df, epoch_id=int(time.time() * 1000))
+        df, parts = sink.layout(df, clustered=False)
+        if sink.format == "bytes":
+            sink.write_bytes_batch(df, epoch_id=int(time.time() * 1000))
+        else:
+            sink.configure(df.write.mode("append"), parts).save()
         self._buffer = []
         return n
 

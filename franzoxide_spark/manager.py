@@ -25,7 +25,7 @@ from pyspark.sql import SparkSession
 from franzoxide_spark.config import Config, ConnectorConfig
 from franzoxide_spark.errors import ConfigError
 from franzoxide_spark.sinks.object_sink import ObjectSink
-from franzoxide_spark.sources.registry import build_source
+from franzoxide_spark.sources.registry import build_source, clusters_by_partition
 
 SINK_CLASSES = ("io.rustconnect.S3SinkConnector", "object", "s3")
 # debugging/testing sinks (Tier C): stream straight to an in-memory table
@@ -225,20 +225,21 @@ class ConnectorManager:
 
         self._check_feeder_manifest(srcs, snk)
 
+        feeders = [self._fold_flush_size(src, snk) for src in srcs]
         records = reduce(
             lambda a, b: a.unionByName(b),
-            [
-                build_source(
-                    self.spark, self.config.kafka, self._fold_flush_size(src, snk)
-                )
-                for src in srcs
-            ],
+            [build_source(self.spark, self.config.kafka, src) for src in feeders],
         )
         if snk.connector_class in DEBUG_SINK_CLASSES:
             query = self._start_debug_sink(records, snk)
         else:
             sink = ObjectSink(self.spark, snk, self.checkpoint_root)
-            query = sink.start(records)
+            # two feeders can both carry one (topic, partition), so only a
+            # single feeder's declaration holds for the union
+            clustered = len(feeders) == 1 and clusters_by_partition(
+                self.config.kafka, feeders[0]
+            )
+            query = sink.start(records, clustered=clustered)
         key = self._pipe_key(srcs, snk)
         self._queries[key] = query
         self._query_members[key] = {s.name for s in srcs} | {snk.name}

@@ -23,6 +23,13 @@ kafka.rs:264-265). Here the native streaming file sink commits files
 through its metadata log under the query checkpoint -> end-to-end
 exactly-once. The bytes format goes through foreachBatch with
 deterministic object keys (idempotent overwrite on replay).
+
+One write path: streamed batches (:meth:`ObjectSink.start`) and pushed
+batches (``ingest.push.PushBatchSink.flush``) both go through
+:meth:`ObjectSink.layout` and :meth:`ObjectSink.configure`. Whether a
+streamed batch is already clustered by partition is declared by its
+source (``sources.registry.clusters_by_partition``, passed in by
+``ConnectorManager``), never guessed by the sink or set by the user.
 """
 
 from __future__ import annotations
@@ -77,7 +84,7 @@ class ObjectSink:
                 " 'partition.field'"
             )
         # a partition.field named like a KafkaRecord envelope column would
-        # make _prepare's withColumn REPLACE that column — corrupting the
+        # make layout() add a second column of that name — corrupting the
         # written envelope and the layout keys (r13 review; the custom
         # time pattern already validates its reserved name the same way)
         if self.partitioner == "field" and self.partition_field in {
@@ -117,8 +124,8 @@ class ObjectSink:
             )
         # the bytes writer lays out {topic}/{partition}_{minoffset}.bin
         # itself — a configured time/field partitioner would be silently
-        # ignored (while still paying _prepare + a per-batch shuffle on
-        # the unused columns): fail fast like the other config
+        # ignored (while still paying layout()'s derived columns and its
+        # per-batch shuffle): fail fast like the other config
         # contradictions above (r13 review)
         if self.format == "bytes" and self.partitioner != "default":
             raise ConfigError(
@@ -150,56 +157,75 @@ class ObjectSink:
         return f"s3a://{bucket}/{self.prefix}"
 
     # -- layout ------------------------------------------------------------
-    def _partition_cols(self) -> list[str]:
-        if self.partitioner == "time":
-            if self.time_pattern:
-                return ["topic"] + [
-                    name
-                    for name, _ in custom_time_partition_cols(
-                        F.lit(0), self.time_pattern
-                    )
-                ]
-            return ["topic", "year", "month", "day", "hour"]
-        if self.partitioner == "field":
-            return ["topic", self.partition_field]
-        return ["topic", "partition"]
+    def layout(
+        self, records: DataFrame, *, clustered: bool
+    ) -> tuple[DataFrame, list[str]]:
+        """``records`` laid out for this sink: the frame to write and its
+        partition columns, shared by streamed and pushed batches.
 
-    def _prepare(self, records: DataFrame) -> DataFrame:
-        df = records
+        Derives the partition columns (``{topic}/{partition}``, the Hive
+        time layout or a custom time pattern, or a payload field), then
+        clusters the batch by them so each partition directory gets one
+        file per batch. Without clustering every (directory x task x
+        batch) emits its own file: 531 files for 1,000 records under the
+        time partitioner. The shuffle is skipped when ``clustered`` and the
+        layout is the default: the source already puts each (topic,
+        partition) in exactly one read task, which the manager learns from
+        ``sources.registry.clusters_by_partition``. Time and field layouts
+        always shuffle. For ``json`` the frame is the encoded envelope
+        (``value``) next to the partition columns."""
         if self.partitioner == "time" and self.time_pattern:
-            df = df.select(
-                "*",
-                *[
-                    col.alias(name)
-                    for name, col in custom_time_partition_cols(
-                        F.col("timestamp"), self.time_pattern
-                    )
-                ],
+            derived = custom_time_partition_cols(
+                F.col("timestamp"), self.time_pattern
             )
         elif self.partitioner == "time":
             y, m, d, h = time_partition_cols(F.col("timestamp"))
             # zero-padded month/day/hour directory names, matching the
             # reference layout (s3.rs:165-177 {:02}) and this repo's
             # time_partition_key golden (month=01, not month=1)
-            df = df.select(
-                "*",
-                y.alias("year"),
-                F.format_string("%02d", m).alias("month"),
-                F.format_string("%02d", d).alias("day"),
-                F.format_string("%02d", h).alias("hour"),
-            )
+            derived = [("year", y)] + [
+                (name, F.format_string("%02d", col))
+                for name, col in (("month", m), ("day", d), ("hour", h))
+            ]
         elif self.partitioner == "field":
             # field value extracted from the JSON payload (B3/A17 made real)
-            df = df.withColumn(
-                self.partition_field,
-                F.coalesce(
-                    F.get_json_object(F.col("value").cast("string"), f"$.{self.partition_field}"),
-                    F.lit("__null__"),
-                ),
+            field = F.get_json_object(
+                F.col("value").cast("string"), f"$.{self.partition_field}"
             )
-        return df
+            derived = [(self.partition_field, F.coalesce(field, F.lit("__null__")))]
+        else:
+            derived = []
+        df = records.select("*", *[col.alias(name) for name, col in derived])
+        parts = ["topic", *([name for name, _ in derived] or ["partition"])]
+        if not (clustered and self.partitioner == "default"):
+            df = df.repartition(*parts)
+        if self.format == "json":
+            df = df.select(
+                *parts,
+                envelope_json(
+                    F.col("topic"),
+                    F.col("partition"),
+                    F.col("offset"),
+                    F.col("timestamp"),
+                    F.col("key"),
+                    F.col("value"),
+                    _headers_json(F.col("headers")),
+                ).alias("value"),
+            )
+        return df, parts
 
     # -- writers -----------------------------------------------------------
+    def configure(self, writer, parts: list[str]):
+        """Point a ``DataStreamWriter`` or ``DataFrameWriter`` over a
+        :meth:`layout` frame at this sink: file format, directory layout,
+        target path and compression. Not for ``bytes``, which writes its
+        own objects (:meth:`write_bytes_batch`)."""
+        writer = writer.format("text" if self.format == "json" else self.format)
+        writer = writer.partitionBy(*parts).option("path", self.path)
+        if self.compression and self.format in ("json", "parquet"):
+            writer = writer.option("compression", self.compression)
+        return writer
+
     def _check_format_available(self) -> None:
         """Fail fast (before touching the stream) when the format needs a
         jar/catalog this deployment doesn't have."""
@@ -229,8 +255,10 @@ class ObjectSink:
                     f".format('iceberg').toTable('{self.connector.name}')"
                 )
 
-    def start(self, records: DataFrame):
-        """Attach this sink to a (streaming) KafkaRecord DataFrame and start."""
+    def start(self, records: DataFrame, *, clustered: bool = False):
+        """Attach this sink to a (streaming) KafkaRecord DataFrame and start.
+        ``clustered``: the source puts each (topic, partition) of a batch
+        in one read task (see :meth:`layout`)."""
         self._check_format_available()
         # A21: reference sinks ensure the target bucket at initialize
         # (s3.rs:463-496); s3a never creates buckets itself. Gate on BOTH
@@ -242,54 +270,17 @@ class ObjectSink:
             from franzoxide_spark.sinks.bucket import ensure_bucket
 
             ensure_bucket(self.connector.config)
-        df = self._prepare(records)
-        parts = self._partition_cols()
-        # Small-file control: without this, every (partition-dir x task x
-        # micro-batch) combination emits its own file — measured 531 files
-        # for 1000 records under the time partitioner. Clustering each
-        # batch by the partition columns yields one file per partition dir
-        # per batch (one shuffle per micro-batch, the standard trade).
-        # Disable with 'files.cluster.by.partition': 'false' for
-        # latency-critical tiny batches.
-        if parts and self.connector.config.get(
-            "files.cluster.by.partition", "true"
-        ).lower() == "true":
-            df = df.repartition(*[F.col(c) for c in parts])
-        if self.format == "json":
-            out = df.select(
-                *parts,
-                envelope_json(
-                    F.col("topic"),
-                    F.col("partition"),
-                    F.col("offset"),
-                    F.col("timestamp"),
-                    F.col("key"),
-                    F.col("value"),
-                    _headers_json(F.col("headers")),
-                ).alias("value"),
-            )
-            writer = out.writeStream.format("text")
-        elif self.format == "parquet":
-            writer = df.writeStream.format("parquet")
-        elif self.format == "avro":
-            writer = df.writeStream.format("avro")
-        elif self.format == "iceberg":
-            # B9/B10 (GAP.md:14,33-36): Iceberg table sink, exactly-once
-            # commit; availability checked in _check_format_available
-            writer = df.writeStream.format("iceberg")
-        else:  # bytes: custom per-group concat objects via foreachBatch
-            writer = df.writeStream.foreachBatch(self._write_bytes_batch)
-            parts = []
-        if parts:
-            writer = writer.partitionBy(*parts).option("path", self.path)
-        if self.compression and self.format in ("json", "parquet"):
-            writer = writer.option("compression", self.compression)
+        df, parts = self.layout(records, clustered=clustered)
+        if self.format == "bytes":  # per-group concat objects
+            writer = df.writeStream.foreachBatch(self.write_bytes_batch)
+        else:
+            writer = self.configure(df.writeStream, parts)
         writer = writer.option("checkpointLocation", self.checkpoint)
         if self.trigger_ms:
             writer = writer.trigger(processingTime=f"{self.trigger_ms} milliseconds")
         return writer.queryName(self.connector.name).start()
 
-    def _write_bytes_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def write_bytes_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """A19 bytes-concat: one object per (topic, partition) group, raw
         ``value`` bytes concatenated with no delimiter (s3.rs:674-688).
 

@@ -124,14 +124,23 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def plan_size_bytes(df: DataFrame) -> int | None:
+def plan_size_bytes(df: DataFrame, *, scans: bool = False) -> int | None:
     """Catalyst stats size of ``df``'s optimized plan, or ``None`` when
     the JVM call fails. Every size-based decision reads sizes here (the
     landing telemetry and fact gate, dedup's prefix checkpoint, the
-    fan-out gates), so a failed stats read must never break a query."""
+    fan-out gates), so a failed stats read must never break a query.
+
+    ``scans``: the summed sizes of the plan's leaves instead — the bytes
+    its file scans read, which a projection above them does not shrink
+    (Catalyst scales a projection's size by row width)."""
     try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if not scans:
+            return int(plan.stats().sizeInBytes())
+        leaves = plan.collectLeaves()
+        return sum(
+            int(leaves.apply(i).stats().sizeInBytes())
+            for i in range(leaves.size())
         )
     except Exception:  # noqa: BLE001 — a stats read must never fail a query
         return None
@@ -148,8 +157,10 @@ def ensure_parallel(df: DataFrame) -> DataFrame:
     ``defaultParallelism`` (``get_spark`` sets shuffle partitions to it).
 
     Narrow: fewer splits than the target. A file scan counts
-    ``max(files, ceil(plan_size_bytes / spark.sql.files.maxPartitionBytes))``
-    (files alone when the size read fails): parquet splits only at row
+    ``max(files, ceil(scan bytes / spark.sql.files.maxPartitionBytes))``
+    (files alone when the size read fails), where the scan bytes are the
+    plan's leaves (``plan_size_bytes(scans=True)``), so a projection
+    counts the splits of the scan under it: parquet splits only at row
     groups, so a few single-row-group files plan ``target`` splits with
     all rows in a handful of tasks (r18, q104's x30 replica: 6 files
     planned as 32 splits, repartition 13.3 s vs plain 23.7 s), while a
@@ -167,7 +178,7 @@ def ensure_parallel(df: DataFrame) -> DataFrame:
     target = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     splits = len(files) if files else df.rdd.getNumPartitions()
-    size = plan_size_bytes(df) if files and splits < target else None
+    size = plan_size_bytes(df, scans=True) if files and splits < target else None
     if size is not None:
         conf = spark._jsparkSession.sessionState().conf()
         splits = max(splits, -(-size // conf.filesMaxPartitionBytes()))

@@ -13,6 +13,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from franzoxide_spark import tables
@@ -163,5 +164,43 @@ def test_one_file_of_many_row_groups_is_left_alone(spark, tmp_path):
         tasks = df.select(F.spark_partition_id()).distinct().count()
         assert tasks >= target
         assert ensure_parallel(df) is df
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_projection_counts_the_splits_of_its_scan(spark, sf_dir, tmp_path):
+    """The byte term sizes the scan leaves under the plan, not the
+    projection: Catalyst scales a projection's size by row width, so
+    q104's four ``lineitem`` columns read about a third of the scan's
+    bytes and the count fell under the target while the scan itself
+    plans twice the target in splits. Shape: sf0.1 ``lineitem`` copied
+    into 2 files of 20,000-row groups, with ``maxPartitionBytes`` at 2m
+    on a 4-core session (scaled with the core count elsewhere)."""
+    from franzoxide_spark.queries.relational import _Q104_COLS
+
+    src = os.path.join(os.path.dirname(sf_dir), "sf0.1", "lineitem.parquet")
+    if not os.path.exists(src):
+        pytest.skip("sf0.1 fixtures absent")
+    target = spark.sparkContext.defaultParallelism
+    li = pq.read_table(src)
+    path = tmp_path / "lineitem.parquet"
+    path.mkdir()
+    half = li.num_rows // 2
+    for i, part in enumerate((li.slice(0, half), li.slice(half))):
+        pq.write_table(
+            part, str(path / f"part-{i}.parquet"), row_group_size=20_000
+        )
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str((2 << 20) * 4 // target))
+    try:
+        scan = table(spark, str(tmp_path), "lineitem")
+        projected = scan.select(*_Q104_COLS)
+        assert scan.rdd.getNumPartitions() >= target
+        assert ensure_parallel(scan) is scan
+        assert ensure_parallel(projected) is projected
+        assert tables.plan_size_bytes(projected) < tables.plan_size_bytes(
+            projected, scans=True
+        )
     finally:
         spark.conf.set(key, prev)

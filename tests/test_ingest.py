@@ -211,10 +211,11 @@ def test_push_probe_error_fails_closed_on_object_store(spark, tmp_path):
 
 
 def test_push_flush_time_and_field_partitioners(spark, tmp_path):
-    """flush() must run the sink's _prepare so time/field partition
-    columns exist before repartition/partitionBy — the call was dropped
-    when the _spark_metadata guard landed, breaking every non-default
-    partitioner push with an unresolved-column error (r14 advice)."""
+    """flush() must derive the time/field partition columns (through
+    the sink's layout) before repartition/partitionBy — the call was
+    dropped when the _spark_metadata guard landed, breaking every
+    non-default partitioner push with an unresolved-column error (r14
+    advice)."""
     # time partitioner: 2024-01-15T12:xx UTC epoch-millis
     sink = _push_sink(
         spark, tmp_path / "t", extra={"partitioner.class": "time"}
@@ -285,6 +286,84 @@ def test_push_parquet_format_and_streamed_equivalence(spark, tmp_path):
     back = spark.read.parquet(os.path.join(str(tmp_path / "out"), "data"))
     assert back.count() == 10
     assert set(back.select("partition").distinct().toPandas()["partition"]) == {0, 1}
+
+
+def _lines_by_dir(base):
+    """{partition directory relative to ``base``: set of written lines}."""
+    out = {}
+    for f in glob.glob(os.path.join(base, "**", "part-*"), recursive=True):
+        rel = os.path.relpath(os.path.dirname(f), base)
+        with open(f) as fh:
+            out.setdefault(rel, set()).update(ln for ln in fh.read().splitlines() if ln)
+    return out
+
+
+@pytest.mark.parametrize("partitioner", ["default", "time"])
+def test_pushed_and_streamed_records_land_the_same_lines(
+    spark, tmp_path, partitioner
+):
+    """Pushed and streamed records share one write path, so the same
+    records land the same lines in the same partition directories."""
+    from franzoxide_spark.config import parse_config
+    from franzoxide_spark.manager import ConnectorManager
+    from franzoxide_spark.sources.kafka import KAFKA_RECORD_SCHEMA
+
+    recs = [
+        pw.KafkaRecord(
+            "test-topic", i % 3, i, 1705320000000 + i * 1_200_000,
+            f"key-{i}".encode() if i % 2 else b"",
+            json.dumps({"id": i}).encode() if i % 4 else b"\xff\x00raw",
+            {"n": str(i)} if i % 5 else {},
+        )
+        for i in range(24)
+    ]
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(
+        [(r.topic, r.partition, r.offset, r.timestamp, r.key, r.value, r.headers)
+         for r in recs],
+        KAFKA_RECORD_SCHEMA,
+    ).write.parquet(in_dir)
+    layout = {"format.class": "json", "partitioner.class": partitioner}
+    cfg = parse_config(
+        {
+            "kafka": {"bootstrap_servers": [], "group_id": "t"},
+            "connectors": [
+                {
+                    "name": "file-source",
+                    "connector_class": "file",
+                    "connector_type": "source",
+                    "topics": ["test-topic"],
+                    "config": {"path": in_dir},
+                },
+                {
+                    "name": "json-sink",
+                    "connector_class": "object",
+                    "connector_type": "sink",
+                    "topics": ["test-topic"],
+                    "config": {
+                        "path.base": str(tmp_path / "streamed"),
+                        "s3.prefix": "data",
+                        **layout,
+                    },
+                },
+            ],
+        }
+    )
+    mgr = ConnectorManager(spark, cfg, str(tmp_path / "ckpt"))
+    mgr.initialize()
+    mgr.start()
+    mgr.process_all_available()
+    mgr.stop()
+
+    sink = _push_sink(spark, tmp_path, extra=layout)
+    sink.put(recs)
+    assert sink.flush() == len(recs)
+
+    streamed = _lines_by_dir(str(tmp_path / "streamed" / "data"))
+    pushed = _lines_by_dir(str(tmp_path / "out" / "data"))
+    assert len(streamed) > 1
+    assert sum(map(len, streamed.values())) == len(recs)
+    assert pushed == streamed
 
 
 # -- grpcio gating ----------------------------------------------------------

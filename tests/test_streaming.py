@@ -170,9 +170,13 @@ def test_custom_time_partition_pattern_layout(spark, sf_dir, tmp_path):
             "time.partition.pattern": "yyyy/MM",
         },
     )
-    assert ObjectSink(spark, snk, str(tmp_path))._partition_cols() == [
-        "topic", "pt0", "pt1",
-    ]
+    from franzoxide_spark.sources.kafka import KAFKA_RECORD_SCHEMA
+
+    records = spark.createDataFrame([], KAFKA_RECORD_SCHEMA)
+    _, parts = ObjectSink(spark, snk, str(tmp_path)).layout(
+        records, clustered=False
+    )
+    assert parts == ["topic", "pt0", "pt1"]
 
     # pattern without the time partitioner is a config error
     with pytest.raises(ConfigError, match="time.partition.pattern"):
@@ -487,12 +491,12 @@ def test_bytes_sink_replay_idempotent(spark, sf_dir, tmp_path, uri_scheme):
         },
     )
     sink = ObjectSink(spark, snk, str(tmp_path / "ckpt"))
-    sink._write_bytes_batch(batch, 0)
+    sink.write_bytes_batch(batch, 0)
     first = {
         f: open(f, "rb").read()
         for f in glob.glob(str(tmp_path / "out" / "data" / "events" / "*.bin"))
     }
-    sink._write_bytes_batch(batch, 1)  # replay
+    sink.write_bytes_batch(batch, 1)  # replay
     second = {
         f: open(f, "rb").read()
         for f in glob.glob(str(tmp_path / "out" / "data" / "events" / "*.bin"))
@@ -585,6 +589,138 @@ def test_sink_clusters_files_per_partition(spark, sf_dir, tmp_path):
     for d in part_dirs:
         files = glob.glob(os.path.join(d, "*.txt"))
         assert len(files) == 1, f"{d} has {len(files)} files (want 1/batch)"
+
+
+def _replay_pipeline(log, out_base, sink_extra=None, feeders=1):
+    """kafka_replay feeder(s) -> json sink config over a staged log."""
+    return parse_config(
+        {
+            "kafka": {"bootstrap_servers": [], "group_id": "t"},
+            "connectors": [
+                *[
+                    {
+                        "name": f"replay-{i}",
+                        "connector_class": "kafka_replay",
+                        "connector_type": "source",
+                        "topics": ["events"],
+                        "config": {"path": log},
+                    }
+                    for i in range(feeders)
+                ],
+                {
+                    "name": "json-sink",
+                    "connector_class": "object",
+                    "connector_type": "sink",
+                    "topics": ["events"],
+                    "config": {
+                        "path.base": out_base,
+                        "s3.prefix": "data",
+                        "format.class": "json",
+                        "partitioner.class": "default",
+                        **(sink_extra or {}),
+                    },
+                },
+            ],
+        }
+    )
+
+
+def _batch_plans(spark, sf_dir, tmp_path, cfg, log, n_partitions):
+    """Run ``cfg`` over two slices of a staged replay log (two batches)
+    and return each batch's executed plan."""
+    from franzoxide_spark.sources.replay import stage_replay
+
+    stage_replay(spark, sf_dir, log, n_partitions=n_partitions, max_offset=20)
+    mgr = ConnectorManager(spark, cfg, str(tmp_path / "ckpt"))
+    mgr.initialize()
+    mgr.start()
+    plans = []
+    try:
+        (query,) = mgr._queries.values()
+        for slice_start in (20, None):
+            query.processAllAvailable()
+            plans.append(
+                query._jsq.streamingQuery().lastExecution()
+                .executedPlan().toString()
+            )
+            if slice_start is not None:
+                stage_replay(
+                    spark, sf_dir, log, n_partitions=n_partitions,
+                    min_offset=slice_start,
+                )
+    finally:
+        mgr.stop()
+    return plans
+
+
+def test_clustered_source_default_layout_writes_without_shuffle(
+    spark, sf_dir, tmp_path
+):
+    """kafka_replay declares that each (topic, partition) of a batch sits
+    in one read task, so the default layout skips the sink's shuffle and
+    still writes one file per partition directory per batch — here with
+    more partitions than read tasks, so each task writes several
+    directories."""
+    n = 2 * spark.sparkContext.defaultParallelism + 1
+    log, out = str(tmp_path / "log"), str(tmp_path / "out")
+    plans = _batch_plans(
+        spark, sf_dir, tmp_path, _replay_pipeline(log, out), log, n
+    )
+    for plan in plans:
+        assert "Exchange" not in plan, plan
+    part_dirs = glob.glob(os.path.join(out, "data", "topic=events", "partition=*"))
+    assert len(part_dirs) == n
+    for d in part_dirs:
+        files = glob.glob(os.path.join(d, "*.txt"))
+        assert len(files) == len(plans), f"{d} has {len(files)} files"
+    lines = [
+        ln
+        for f in glob.glob(os.path.join(out, "data", "**", "*.txt"), recursive=True)
+        for ln in open(f).read().splitlines()
+        if ln
+    ]
+    assert len(lines) == spark.read.parquet(log).count()
+
+
+@pytest.mark.parametrize(
+    "sink_extra,feeders",
+    [
+        ({"partitioner.class": "time"}, 1),
+        ({"partitioner.class": "field", "partition.field": "k"}, 1),
+        ({}, 2),
+    ],
+    ids=["time", "field", "two-feeders"],
+)
+def test_sink_shuffles_unless_layout_and_source_allow(
+    spark, sf_dir, tmp_path, sink_extra, feeders
+):
+    """Time and field layouts cut across Kafka partitions, and two feeders
+    can both carry one (topic, partition): all three keep the shuffle."""
+    log = str(tmp_path / "log")
+    cfg = _replay_pipeline(log, str(tmp_path / "out"), sink_extra, feeders)
+    plans = _batch_plans(spark, sf_dir, tmp_path, cfg, log, 4)
+    for plan in plans:
+        assert "Exchange" in plan, plan
+
+
+def test_clusters_by_partition_is_declared_by_the_source():
+    from franzoxide_spark.config import ConnectorConfig, KafkaConfig
+    from franzoxide_spark.sources.registry import clusters_by_partition
+
+    def source(cls, tasks_max=1):
+        return ConnectorConfig(
+            "s", cls, "source", tasks_max=tasks_max, topics=["t"],
+            config={"path": "unused"},
+        )
+
+    kafka = KafkaConfig(bootstrap_servers=["localhost:9092"])
+    for cls in ("kafka", "io.rustconnect.KafkaSourceConnector"):
+        assert clusters_by_partition(kafka, source(cls, None))
+        assert clusters_by_partition(kafka, source(cls, 1))
+        assert not clusters_by_partition(kafka, source(cls, 2))
+    assert clusters_by_partition(kafka, source("kafka_replay"))
+    assert not clusters_by_partition(kafka, source("file"))
+    assert not clusters_by_partition(kafka, source("rate"))
 
 
 def test_streaming_session_window(spark, tmp_path):
@@ -2258,7 +2394,7 @@ def test_bytes_sink_tolerates_tombstone_values(spark, tmp_path):
         [("t", 0, 1, b"abc"), ("t", 0, 2, None), ("t", 0, 3, b"def")],
         "topic string, partition int, offset long, value binary",
     )
-    sink._write_bytes_batch(batch, epoch_id=0)
+    sink.write_bytes_batch(batch, epoch_id=0)
     objs = glob.glob(os.path.join(out_base, "data", "t", "*.bin"))
     assert len(objs) == 1
     assert open(objs[0], "rb").read() == b"abcdef"
