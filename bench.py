@@ -32,8 +32,10 @@ import os
 import sys
 import time
 
+from franzoxide_spark import measure
 from franzoxide_spark import queries as q
 from franzoxide_spark.session import get_spark
+from franzoxide_spark.tables import TABLES, table
 
 # Formally recorded floor cases (r14 verdict #2 option b): queries whose
 # resting ratio sits near the per-query bar on a MEASURED, multi-shape
@@ -95,7 +97,8 @@ PER_QUERY_NOTES = {
         "replaced; AQE skew handling covers joins only, and the join "
         "form removes the skewed full-stream term exchange outright — "
         "A/B'd flat at sf0.1/10x, winning 5/6 rounds at 30x verbatim "
-        "replicas, scripts/ab_q60.py + operator docstring). The DuckDB "
+        "replicas, BASELINE.md 'Round-18 q60 df-attach' + operator "
+        "docstring). The DuckDB "
         "oracle runs ~0.1 s on 5k docs because its per-statement "
         "constants are smaller. Fan-out routing A/B'd r16 and NOT "
         "taken. An over-1 s appearance is host drift around the "
@@ -404,21 +407,6 @@ PREV_PRINTED_QUERIES = (
 )
 
 
-def _clear_session_state(spark) -> None:
-    """Reset cached state between timed queries so each starts from the
-    same clean session the DuckDB side gets per statement. Queries that
-    cache() internally (q33's signature reuse) or localCheckpoint (q139's
-    PageRank iterations) leave persisted blocks behind; across a 150-query
-    suite those accumulate and degrade LATER queries' timings (observed:
-    q79 at 3.1 s in-suite vs 1.5 s isolated)."""
-    try:
-        spark.catalog.clearCache()
-        for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
-            rdd.unpersist(False)
-    except Exception:  # noqa: BLE001 — cleanup must never fail the bench
-        pass
-
-
 class _LoadSentinel:
     """Raw host-load probe (r12 post-mortem): a fixed ~100 ms DuckDB
     aggregate on a dedicated single-threaded connection, sampled at
@@ -476,8 +464,6 @@ def _time_oracles(
     (warm connection, min-of-runs, pandas materialization) — the apples-to-
     apples denominator for the per-query bar in BASELINE.md."""
     import duckdb
-
-    from franzoxide_spark.tables import TABLES
 
     con = duckdb.connect()
     try:
@@ -840,29 +826,19 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — logging config must not fail the bench
         pass
 
-    # Warm the catalog (file listings + parquet footers for every table)
-    # and the JVM/codegen paths once so per-query timings reflect a warm
-    # engine, mirroring the reference's warm-session protocol.
-    from franzoxide_spark.tables import TABLES, table
-
-    # One broken table must not zero the whole artifact (r5: the events
-    # loader crash here produced rc=1/parsed=null for the round) — record
-    # the failure and let every query that doesn't touch that table run.
-    for t in TABLES:
-        try:
-            table(spark, sf_dir, t).schema
-        except Exception as e:  # noqa: BLE001 — artifact must survive
-            errors[f"table:{t}"] = f"{type(e).__name__}: {e}"[:300]
-    try:
-        q.QUERIES["q02_agg_pricing_summary"](spark, sf_dir).toPandas()
-    except Exception as e:  # noqa: BLE001
-        errors["warmup:q02_agg_pricing_summary"] = f"{type(e).__name__}: {e}"[:300]
+    # Warm session, mirroring the reference's warm-session protocol; a
+    # broken table is recorded, not fatal (r5: one loader crash here
+    # produced rc=1/parsed=null for the round).
+    errors.update(measure.warm(spark, sf_dir))
 
     # Steady-state protocol: each query runs RUNS times on the warm
     # session and reports the fastest — one-shot Janino codegen compile
     # (~0.3-0.8s per unique plan) is a constant that vanishes at real data
     # scale and would otherwise dominate small-SF timings; the min also
-    # rejects shared-host load spikes (observed 2x suite variance).
+    # rejects shared-host load spikes (observed 2x suite variance). Every
+    # run, not just every query, starts from a reset session: a query's
+    # own cache()/persist() must not serve its later runs, because the
+    # DuckDB side never reuses a statement's work.
     timings: dict[str, float] = {}
     # every raw sample goes to the detail artifact: on a load-spiked host
     # (observed: two different queries spiking 4-20x in two same-day runs)
@@ -882,29 +858,22 @@ def main() -> None:
             sentinel.probe("spark")
         fn = q.QUERIES[name]
         starts[name] = round(time.perf_counter() - t_suite0, 2)
-        best = float("inf")
         runs_s: list[float] = []
         try:
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                # Arrow-batched materialization: executes the full plan and
-                # transfers the result columnar (comparable to the DuckDB
-                # reference's native fetch, unlike row-at-a-time collect()).
-                fn(spark, sf_dir).toPandas()
-                runs_s.append(round(time.perf_counter() - t0, 4))
-                best = min(best, runs_s[-1])
+            # Arrow-batched materialization: executes the full plan and
+            # transfers the result columnar (comparable to the DuckDB
+            # reference's native fetch, unlike row-at-a-time collect()).
+            for sec in measure.timed_runs(
+                spark, lambda: fn(spark, sf_dir).toPandas(), runs
+            ):
+                runs_s.append(sec)
         except Exception as e:  # noqa: BLE001 — time the rest regardless
             errors[name] = f"{type(e).__name__}: {e}"[:300]
-            # a transient failure on a LATER run must not discard a valid
-            # earlier timing — the min-of-N exists to reject load spikes
-            if best != float("inf"):
-                timings[name] = round(best, 4)
-                samples[name] = runs_s
-            _clear_session_state(spark)
-            continue
-        timings[name] = round(best, 4)
-        samples[name] = runs_s
-        _clear_session_state(spark)
+        # a transient failure on a LATER run must not discard a valid
+        # earlier timing — the min-of-N exists to reject load spikes
+        if runs_s:
+            timings[name] = min(runs_s)
+            samples[name] = runs_s
 
     # Measured per-query scheduling floor: the cost of pushing a near-empty
     # job (5-row dim scan + count) through Spark's scheduler on this host.
@@ -912,20 +881,22 @@ def main() -> None:
     # amortizes to nothing at real scale, so the per-query bar (BASELINE.md)
     # is spark_sec <= 2 * duckdb_sec + sched_floor_s, with the floor
     # MEASURED here rather than asserted.
-    floor = float("inf")
+    floor_s: list[float] = []
     try:
-        for _ in range(max(runs, 3)):
-            t0 = time.perf_counter()
-            table(spark, sf_dir, "region").groupBy().count().toPandas()
-            floor = min(floor, time.perf_counter() - t0)
+        for sec in measure.timed_runs(
+            spark,
+            lambda: table(spark, sf_dir, "region").groupBy().count().toPandas(),
+            max(runs, 3),
+        ):
+            floor_s.append(sec)
     except Exception as e:  # noqa: BLE001
         errors["sched_floor"] = f"{type(e).__name__}: {e}"[:300]
-    floor_failed = floor == float("inf")
+    floor_failed = not floor_s
     # without a measured floor, the per-query bar can't be evaluated as
     # documented (spark <= 2*duckdb + floor) — flagging with floor=0 would
     # wrongly flag queries the criterion permits, so skip the flag instead
     # (the recorded error makes the skip auditable)
-    floor = 0.0 if floor_failed else round(floor, 4)
+    floor = 0.0 if floor_failed else min(floor_s)
 
     # Borderline re-measure: a query sitting near the 2x bar flips in and
     # out of over_bar on shared-host load spikes alone (observed: q61 at
@@ -959,25 +930,19 @@ def main() -> None:
             )
             if reason is None:
                 continue
-            best = timings[name]
             re_measured.append(name)
             re_measure_reasons[name] = reason
             if sentinel is not None:
                 sentinel.probe("re_measure")
             try:
-                for _ in range(runs):
-                    t0 = time.perf_counter()
-                    q.QUERIES[name](spark, sf_dir).toPandas()
-                    samples.setdefault(name, []).append(
-                        round(time.perf_counter() - t0, 4))
-                    best = min(best, samples[name][-1])
-                    _clear_session_state(spark)
+                for sec in measure.timed_runs(
+                    spark, lambda: q.QUERIES[name](spark, sf_dir).toPandas(),
+                    runs,
+                ):
+                    samples[name].append(sec)
             except Exception:  # noqa: BLE001 — keep the first-pass timing
-                # a failed run must still clear cached/persisted state, or
-                # its leftovers degrade every LATER re-measured query (the
-                # q79 3.1-vs-1.5 s in-suite contamination _clear exists for)
-                _clear_session_state(spark)
-            timings[name] = round(best, 4)
+                pass
+            timings[name] = min(samples[name])
 
     spark.stop()
 

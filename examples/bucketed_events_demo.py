@@ -15,9 +15,9 @@ exchange disappears (visible in the plan), paid once at landing time.
 This script lands the fixture events both ways — plain parquet and a
 bucketed+sorted table (bucketBy on the key, sortBy (key, ts)) — runs
 q177's batch face (TTL-session dedup: lag + running-sum windows + a
-group-by, all on the user key) over each, prints exchange counts and
-timings, and asserts the bucketed plan is exchange-FREE with identical
-results.
+group-by, all on the user key) over each through measure.compare_arms
+(identical rows first, then interleaved timed runs), prints exchange
+counts and timings, and asserts the bucketed plan is exchange-FREE.
 
 Measured at sf0.1 on local[32] (warm best-of-3): plain 3.7 s /
 1 exchange -> bucketed 1.8 s / 0 exchanges; the delta grows with data
@@ -31,12 +31,15 @@ Usage: python examples/bucketed_events_demo.py
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from franzoxide_spark.measure import compare_arms  # noqa: E402
+from franzoxide_spark.operators.landing import land_events_relation  # noqa: E402
 from franzoxide_spark.session import get_spark  # noqa: E402
 from franzoxide_spark.streaming.stateful import batch_ttl_session_dedup  # noqa: E402
 from franzoxide_spark.tables import table  # noqa: E402
@@ -50,11 +53,8 @@ def main() -> None:
 
     ev = table(spark, sf_dir, "events")
     # land once, bucketed by the raw user key and in-bucket sorted by
-    # (key, ts) — the write is the amortized cost. This is the
-    # operators/landing.py API the r16 registry routing will use
-    # (shared_events_relation adds the session/marker/adoption flow).
-    from franzoxide_spark.operators.landing import land_events_relation
-
+    # (key, ts) — the write is the amortized cost. shared_events_relation
+    # adds the session/marker/adoption flow on top of this call.
     spark.sql("DROP TABLE IF EXISTS events_by_user")
     t0 = time.time()
     evb = land_events_relation(
@@ -62,28 +62,23 @@ def main() -> None:
     )
     landed_s = time.time() - t0
 
-    def run(label, df, key_col):
-        out = batch_ttl_session_dedup(df, key_col, "event_type", "ts", 3600)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        n_ex = plan.count("Exchange hashpartitioning")
-        best, n = float("inf"), None
-        for _ in range(3):
-            t0 = time.time()
-            n = out.count()
-            best = min(best, time.time() - t0)
-        print(f"{label:10s} exchanges={n_ex} best={best:.3f}s rows={n}")
-        return n_ex, n, out
+    def dedup(df):
+        return lambda: batch_ttl_session_dedup(
+            df, "user_id", "event_type", "ts", 3600
+        )
 
-    ex_p, n_p, out_p = run("plain", ev, "user_id")
-    ex_b, n_b, out_b = run("bucketed", evb, "user_id")
+    arms = compare_arms(
+        spark, {"plain": dedup(ev), "bucketed": dedup(evb)}, runs=3
+    )
+    print(json.dumps(arms, indent=1))
     print(f"landing wrote {n_buckets} buckets in {landed_s:.2f}s (one-time)")
 
-    assert ex_p >= 1, "plain path should shuffle on the user key"
-    assert ex_b == 0, "bucketed path must be exchange-free"
-    assert n_p == n_b, (n_p, n_b)
-    # row-identical, not just count-identical
-    diff = out_p.exceptAll(out_b).count() + out_b.exceptAll(out_p).count()
-    assert diff == 0, f"{diff} rows differ between the two paths"
+    assert arms["plain"]["exchanges"] >= 1, (
+        "plain path should shuffle on the user key"
+    )
+    assert arms["bucketed"]["exchanges"] == 0, (
+        "bucketed path must be exchange-free"
+    )
     print("invariants hold: exchange-free bucketed plan, identical relation")
     spark.sql("DROP TABLE IF EXISTS events_by_user")
     spark.stop()

@@ -6,19 +6,19 @@ At sf0.1 the relational contract queries broadcast their small side, so
 bucketing buys no suite time — the claim that needs a number is the
 100 TB regime where both sides are fact-sized and the join pays a full
 shuffle+sort of each. This script builds R× replicas of orders/lineitem
-(TPC-H's own growth law: disjoint orderkey populations per replica, the
-scale_slope.py shift), lands both sides ONCE as bucketed+in-bucket-sorted
-catalog tables (operators/bucketing.py — the capability plan-pinned by
-tests/test_plans.py::test_bucketed_join_has_no_exchange), and times the
-canonical fact-fact workload
+with measure.build_scaled (TPC-H's own growth law: disjoint orderkey
+populations per replica), lands both sides ONCE as bucketed+in-bucket-
+sorted catalog tables (operators/bucketing.py — the capability
+plan-pinned by tests/test_plans.py::test_bucketed_join_has_no_exchange),
+and times the canonical fact-fact workload
 
     lineitem ⋈ orders ON orderkey → revenue per order-priority
 
 with auto-broadcast DISABLED on BOTH arms (modelling both sides too big
-to broadcast). Arms alternate within one session (interleaved, min-of-N,
-clearCache between runs); result identity is asserted per scale. The
-landing build time is reported separately — it is the write-once cost
-the land-once/join-many trade amortizes (same cost model as the
+to broadcast) through measure.compare_arms: result identity first, then
+interleaved runs with a session reset after each. The landing build time
+is reported separately — it is the write-once cost the
+land-once/join-many trade amortizes (same cost model as the
 shingle/events/posting landings).
 
 Usage: python examples/bucketed_facts_demo.py
@@ -40,46 +40,11 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from franzoxide_spark.operators.bucketing import (  # noqa: E402
-    bucketed_join,
-    write_bucketed,
-)
+from franzoxide_spark.measure import build_scaled, compare_arms  # noqa: E402
+from franzoxide_spark.operators.bucketing import write_bucketed  # noqa: E402
 from franzoxide_spark.session import get_spark  # noqa: E402
-from franzoxide_spark.tables import table  # noqa: E402
 
 N_BUCKETS = 64
-ORDER_SHIFT = 100_000_000  # scale_slope.py's orderkey growth law
-
-
-def build_replicas(spark, sf_dir: str, out: str, r: int) -> None:
-    reps = spark.range(r).select(F.col("id").alias("__rep"))
-    li = table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    (
-        li.crossJoin(reps)
-        .select(
-            (F.col("l_orderkey") + F.col("__rep") * ORDER_SHIFT).alias(
-                "l_orderkey"
-            ),
-            "l_extendedprice",
-            "l_discount",
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(out, "lineitem.parquet"))
-    )
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    (
-        o.crossJoin(reps)
-        .select(
-            (F.col("o_orderkey") + F.col("__rep") * ORDER_SHIFT).alias(
-                "o_orderkey"
-            ),
-            "o_orderpriority",
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(out, "orders.parquet"))
-    )
 
 
 def workload(li, o):
@@ -92,12 +57,6 @@ def workload(li, o):
             F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
         ).alias("revenue"),
     )
-
-
-def _clear(spark) -> None:
-    spark.catalog.clearCache()
-    for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
-        rdd.unpersist(False)
 
 
 def main() -> None:
@@ -122,11 +81,15 @@ def main() -> None:
         for r in scales:
             sdir = os.path.join(work, f"x{r}")
             t0 = time.perf_counter()
-            build_replicas(spark, sf_dir, sdir, r)
+            build_scaled(spark, sf_dir, sdir, r, tables=("lineitem", "orders"))
             build_s = round(time.perf_counter() - t0, 2)
 
-            li = spark.read.parquet(os.path.join(sdir, "lineitem.parquet"))
-            o = spark.read.parquet(os.path.join(sdir, "orders.parquet"))
+            li = spark.read.parquet(
+                os.path.join(sdir, "lineitem.parquet")
+            ).select("l_orderkey", "l_extendedprice", "l_discount")
+            o = spark.read.parquet(
+                os.path.join(sdir, "orders.parquet")
+            ).select("o_orderkey", "o_orderpriority")
 
             t0 = time.perf_counter()
             write_bucketed(
@@ -139,45 +102,21 @@ def main() -> None:
             )
             land_s = round(time.perf_counter() - t0, 2)
 
-            def plain():
-                return workload(li, o)
-
-            def bucketed():
-                bl = spark.table(f"bf_lineitem_x{r}")
-                bo = spark.table(f"bf_orders_x{r}")
-                return workload(bl, bo)
-
-            # result identity + plan shape before timing
-            a = plain().toPandas().sort_values("o_orderpriority")
-            b = bucketed().toPandas().sort_values("o_orderpriority")
-            rows_match = a.reset_index(drop=True).equals(
-                b.reset_index(drop=True)[a.columns]
-            )
-            bplan = bucketed()._jdf.queryExecution().executedPlan().toString()
-            pplan = plain()._jdf.queryExecution().executedPlan().toString()
+            arms = compare_arms(spark, {
+                "plain": lambda: workload(li, o),
+                "bucketed": lambda: workload(
+                    spark.table(f"bf_lineitem_x{r}"),
+                    spark.table(f"bf_orders_x{r}"),
+                ),
+            }, runs)
             # the join itself is exchange-free on the bucketed arm: the
             # ONLY exchange left is the 5-row priority rollup's
-            join_exchange_free = bplan.count("Exchange") <= 1
-            plain_shuffles = pplan.count("Exchange")
-            _clear(spark)
-
-            arms: dict[str, list[float]] = {"plain": [], "bucketed": []}
-            for _ in range(runs):
-                for name, fn in (("plain", plain), ("bucketed", bucketed)):
-                    t0 = time.perf_counter()
-                    fn().toPandas()
-                    arms[name].append(round(time.perf_counter() - t0, 3))
-                    _clear(spark)
             out["scales"][f"x{r}"] = {
                 "build_s": build_s,
                 "land_s": land_s,
-                "rows_match": bool(rows_match),
-                "bucketed_join_exchange_free": bool(join_exchange_free),
-                "plain_plan_exchanges": plain_shuffles,
-                "plain_min": min(arms["plain"]),
-                "bucketed_min": min(arms["bucketed"]),
-                "plain": arms["plain"],
-                "bucketed": arms["bucketed"],
+                "bucketed_join_exchange_free":
+                    arms["bucketed"]["exchanges"] <= 1,
+                **arms,
             }
             print(json.dumps({f"x{r}": out["scales"][f"x{r}"]}), flush=True)
             spark.sql(f"DROP TABLE IF EXISTS bf_lineitem_x{r}")

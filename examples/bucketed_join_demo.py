@@ -2,22 +2,22 @@
 shingle self-join and removes its exchange+sort (the n·log n term that
 put q119 ~1.2x over linear at 30x, BASELINE.md round-9 table).
 
-Builds the (doc_id, g) shingle-hash relation from a scaled documents
-fixture once, persists it twice — plain parquet and a bucketed+sorted
-table (bucketBy on g) — then times the candidate-pair aggregation
-(the q119 core: self-join on g, count per pair) over each. With both
-sides bucketed and in-bucket sorted on the join key, the sort-merge
-join needs NO exchange and NO sort (visible in the plan), so the
-supra-linear term disappears; the plain path pays a full shuffle+sort
-of the exploded relation on every run.
+Lands the (doc_id, n, g) shingle-hash relation of a scaled documents
+fixture once with dedup.land_shingle_relation (bucketed and in-bucket
+sorted on g), copies it to plain parquet, then times the candidate-pair
+aggregation (the q119 core: self-join on g, count per pair) over each.
+With both sides bucketed and sorted on the join key, the sort-merge join
+needs NO exchange (visible in the plan), so the supra-linear term
+disappears; the plain path pays a full shuffle+sort of the exploded
+relation on every run.
 
 This is the write-once/join-many trade a 100 TB deployment makes: the
 dedup corpus is landed bucketed by shingle hash, and every downstream
 containment/jaccard/minhash-verify pass joins exchange-free.
 
 Usage: python examples/bucketed_join_demo.py
-  [env: SPARK_GRAFT_SCALE_DIR (default .scale/x30 — run
-  examples/scale_slope.py first to build it), SPARK_GRAFT_BENCH_RUNS]
+  [env: SPARK_GRAFT_SCALE_DIR (default .scale/x30 — build it first with
+  SPARK_GRAFT_SCALE_R=30 python scripts/slope_suite.py), SPARK_GRAFT_BENCH_RUNS]
 Prints one JSON document; results are recorded in BASELINE.md.
 """
 
@@ -27,13 +27,13 @@ import json
 import os
 import shutil
 import sys
-import time
 
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from franzoxide_spark.functions.text import shingles, tokens  # noqa: E402
+from franzoxide_spark.measure import compare_arms  # noqa: E402
+from franzoxide_spark.operators.dedup import land_shingle_relation  # noqa: E402
 from franzoxide_spark.session import get_spark  # noqa: E402
 from franzoxide_spark.tables import table  # noqa: E402
 
@@ -73,52 +73,23 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = table(spark, scale_dir, "documents")
-    sh = (
-        docs.select("doc_id", tokens("text").alias("__toks"))
-        .select("doc_id", F.explode(shingles("__toks", 3)).alias("s"))
-        .select(
-            "doc_id",
-            F.expr(
-                "cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint)"
-            ).alias("g"),
-        )
-    )
-
-    plain_path = os.path.join(os.path.dirname(scale_dir), "demo_plain")
-    if os.path.exists(plain_path):
-        shutil.rmtree(plain_path)
-    sh.write.parquet(plain_path)
-
     spark.sql("DROP TABLE IF EXISTS demo_bucketed")
-    (
-        sh.write.bucketBy(N_BUCKETS, "g").sortBy("g")
-        .mode("overwrite")
-        .saveAsTable("demo_bucketed")
+    bucketed = land_shingle_relation(
+        docs, "text", "doc_id", "demo_bucketed", n_buckets=N_BUCKETS
     )
-
+    plain_path = os.path.join(os.path.dirname(scale_dir), "demo_plain")
+    bucketed.write.mode("overwrite").parquet(plain_path)
     plain = spark.read.parquet(plain_path)
-    bucketed = spark.table("demo_bucketed")
-    n_rows = plain.count()
 
-    result: dict = {"n_shingle_rows": n_rows, "n_buckets": N_BUCKETS,
-                    "scale_dir": scale_dir, "plans": {}, "timings": {}}
-    for label, df in (("plain", plain), ("bucketed", bucketed)):
-        best = float("inf")
-        pairs = None
-        agg = candidate_pairs(df)
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            pairs = agg.count()
-            best = min(best, time.perf_counter() - t0)
-        # AQE final plan (valid only after execution): the join-side
-        # exchange/sort count is the thing bucketing removes
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        result["plans"][label] = {
-            "exchanges": plan.count("Exchange"),
-            "sorts": plan.count("+- Sort ") + plan.count(":- Sort "),
-        }
-        result["timings"][label] = {"sec": round(best, 3), "pairs": pairs}
-    print(json.dumps(result, indent=1))
+    arms = compare_arms(
+        spark,
+        {"plain": lambda: candidate_pairs(plain),
+         "bucketed": lambda: candidate_pairs(bucketed)},
+        runs,
+    )
+    print(json.dumps({"n_shingle_rows": plain.count(),
+                      "n_buckets": N_BUCKETS, "scale_dir": scale_dir,
+                      "arms": arms}, indent=1))
     spark.sql("DROP TABLE IF EXISTS demo_bucketed")
     shutil.rmtree(plain_path, ignore_errors=True)
     spark.stop()

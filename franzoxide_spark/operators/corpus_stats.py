@@ -83,10 +83,11 @@ def tfidf_top_terms(
     sublinear — the same boundedness argument as q61's trigram LM and
     q94's vocab table), and the probe back onto the pair stream is a
     broadcast hash join. Interleaved A/B (min-of-6, noop, identity
-    asserted; scripts/ab_q60.py): sf0.1 floor-band flat-to-slightly-
-    worse (r17: 1.299 vs 1.374 min — why it was not taken then), 10x
-    replicas flat in BOTH growth modes (suffixed 2.28/2.36 vs 2.18/2.48,
-    verbatim 1.156/1.205 vs 1.132/1.208 min/med), 30x verbatim the join
+    asserted; BASELINE.md "Round-18 q60 df-attach"): sf0.1 floor-band
+    flat-to-slightly-worse (r17: 1.299 vs 1.374 min — why it was not
+    taken then), 10x replicas flat in BOTH growth modes (suffixed
+    2.28/2.36 vs 2.18/2.48, verbatim 1.156/1.205 vs 1.132/1.208
+    min/med), 30x verbatim the join
     form wins 5/6 rounds (1.875/1.907 -> 1.740/1.807) and the gap grows
     with scale — taken on the 30x evidence plus the structural shape
     (one fewer corpus-sized exchange, no unsplittable hot-term window

@@ -151,8 +151,8 @@ register("q24_time_partition_derive", q24, Q24_SQL)
 #        The sniff here is the JVM try_parse_json proxy on BOTH engines
 #        (json_valid in DuckDB) — the production envelope path's strict
 #        orjson sniff (functions/envelope.py) agrees with it on every
-#        fixture payload; the strict-vs-lenient delta is measured in
-#        examples/scale_slope.py, not here.
+#        fixture payload; the strict-vs-lenient delta is recorded in
+#        BASELINE.md "Round-4 envelope (A18) throughput", not here.
 # --------------------------------------------------------------------------
 def q107(spark: SparkSession, sf_dir: str) -> DataFrame:
     rec = kafka_records_from_events(spark, sf_dir)

@@ -1,17 +1,20 @@
-"""Isolated per-query A/B measurement, bench-protocol-faithful.
+"""Time named queries in isolation with bench.py's protocol.
 
 Usage: python scripts/isolate_bench.py [--runs N] [--explain] qname [qname ...]
 
-Mirrors bench.py's measurement exactly (warm session, toPandas
-materialization, min-of-N with clearCache between runs) but isolates the
-named queries so host-window noise from a 176-query suite is out of the
-picture.  With --explain, also writes .explain("formatted") output to
-stdout per query.  Environment: SPARK_GRAFT_SF_DIR (default sf0.1),
-SPARK_GRAFT_CPUS.
+Same protocol as bench.py (warm session, toPandas materialization, a
+session reset after every run, min of N) on the named queries only, so
+the load window of a 176-query suite is out of the picture. Next to the
+full-run min it reports the split of a run into plan build (Python
+DataFrame construction, including eager jobs such as landing writes) and
+execution, and the Spark jobs the last run started. With --explain it
+also prints each query's formatted plan. Environment:
+SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -21,66 +24,63 @@ _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _HERE not in sys.path:
     sys.path.insert(0, _HERE)
 
+from franzoxide_spark import measure  # noqa: E402
 from franzoxide_spark import queries as q  # noqa: E402
 from franzoxide_spark.session import get_spark  # noqa: E402
 
 
-def _clear(spark) -> None:
-    try:
-        spark.catalog.clearCache()
-        for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
-            rdd.unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
-
-
-def main() -> None:
-    args = sys.argv[1:]
-    runs = 5
-    explain = False
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--runs":
-            runs = int(args[i + 1])
-            i += 2
-        elif args[i] == "--explain":
-            explain = True
-            i += 1
-        else:
-            names.append(args[i])
-            i += 1
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    q.load_all()
-    spark = get_spark(app_name="isolate_bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    # same warm-up as bench.py
-    from franzoxide_spark.tables import TABLES, table
-
-    for t in TABLES:
-        table(spark, sf_dir, t).schema
-    q.QUERIES["q02_agg_pricing_summary"](spark, sf_dir).toPandas()
-    _clear(spark)
-
+def run(spark, sf_dir: str, names: list[str], runs: int = 5) -> dict:
+    """``{query: {"min", "build", "exec", "jobs", "samples"}}``: min full
+    run, min build, min execution (seconds), and the job count of the
+    last run."""
+    errors = measure.warm(spark, sf_dir)
+    if errors:
+        raise RuntimeError(f"warm-up failed: {errors}")
+    tracker = spark.sparkContext.statusTracker()
     out: dict[str, dict] = {}
     for name in names:
         fn = q.QUERIES[name]
-        spark.sparkContext.setJobDescription(name)
-        samples = []
-        for _ in range(runs):
+        build: list[float] = []
+        execute: list[float] = []
+        jobs = 0
+
+        def one() -> None:
+            nonlocal jobs
+            before = set(tracker.getJobIdsForGroup(None))
             t0 = time.perf_counter()
-            fn(spark, sf_dir).toPandas()
-            samples.append(round(time.perf_counter() - t0, 4))
-            _clear(spark)
-        out[name] = {"min": min(samples), "samples": samples}
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            df.toPandas()
+            build.append(round(t1 - t0, 4))
+            execute.append(round(time.perf_counter() - t1, 4))
+            jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+
+        spark.sparkContext.setJobDescription(name)
+        samples = list(measure.timed_runs(spark, one, runs))
         spark.sparkContext.setJobDescription(None)
-    if explain:
-        for name in names:
-            df = q.QUERIES[name](spark, sf_dir)
-            print(f"===== {name} =====")
-            print(df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    print(json.dumps(out, indent=1))
+        out[name] = {"min": min(samples), "build": min(build),
+                     "exec": min(execute), "jobs": jobs, "samples": samples}
+    return out
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--runs", type=int, default=5)
+    ap.add_argument("--explain", action="store_true")
+    ap.add_argument("names", nargs="+")
+    args = ap.parse_args()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(app_name="isolate_bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        out = run(spark, sf_dir, args.names, args.runs)
+        if args.explain:
+            for name in args.names:
+                print(f"===== {name} =====")
+                q.QUERIES[name](spark, sf_dir).explain("formatted")
+        print(json.dumps(out, indent=1))
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -178,7 +178,7 @@ def test_every_expensive_exempt_ratio_carries_a_note():
     )
     assert not missing, (
         f"expensive bar-exempt queries without a PER_QUERY_NOTES entry: "
-        f"{missing} — measure the slope (examples/scale_slope.py "
+        f"{missing} — measure the slope (scripts/slope_suite.py "
         f"replicas), explain the floor or fix the plan, then add the note"
     )
 

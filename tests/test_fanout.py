@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from franzoxide_spark import tables
+from franzoxide_spark.measure import reset
 from franzoxide_spark.tables import ensure_parallel, fanned_table, table
 
 
@@ -71,17 +72,14 @@ def test_fanout_cache_purged_with_stale_sessions(spark, sf_dir):
 
 
 def test_fanned_relation_survives_external_cache_clear(spark, sf_dir):
-    """bench.py's inter-query hygiene (_clear_session_state) clears the
-    cache and unpersists every RDD between timed queries. A persisted
+    """The measurement reset (measure.reset) clears the cache and
+    unpersists every RDD between timed runs. A persisted
     relation must RECOMPUTE through that (and re-register its persist);
     the original localCheckpoint variant crashed with 'checkpoint block
     not found' on every post-clear consumer (45-error artifact)."""
     fanned = fanned_table(spark, sf_dir, "documents")
     n_before = fanned.count()  # materialize
-    # the exact bench.py clear
-    spark.catalog.clearCache()
-    for rdd in dict(spark.sparkContext._jsc.getPersistentRDDs()).values():
-        rdd.unpersist(False)
+    reset(spark)
     again = fanned_table(spark, sf_dir, "documents")
     assert again.count() == n_before  # recomputes, no dangling blocks
     lvl = again.storageLevel
